@@ -450,9 +450,6 @@ def seed_crawl(spark: SparkSession, root: str, seeds, web: WebConfig,
     distributedly, never materialized on the driver.  A driver list is
     embedded into every task binary — ~8 MB at 1.2M seeds, a
     cores-independent cost the N-vs-4N ladder measures directly)."""
-    import time as _time
-
-    _t = _time.time()
     adapter = fetch_adapter or SynthWebAdapter(web)
     fmt = get_table_format(spark)
     if isinstance(seeds, DataFrame):
@@ -499,13 +496,6 @@ def seed_crawl(spark: SparkSession, root: str, seeds, web: WebConfig,
         "url_canon", "url_hash", "host", "host_bucket",
         "priority", "depth", "discovered_epoch",
     ).dropDuplicates(["url_canon"]).cache()
-    if os.environ.get("SPARK_GRAFT_TRACE"):
-        # sub-stage attribution (trace only): the caches make the split
-        # jobs sum to the same work the fused job would do
-        c_cached.count()
-        _t = _trace("seed-plan/canonicalize", _t)
-        robots.count()
-        _t = _trace("seed-plan/robots", _t)
     bucket_rows = frontier.groupBy("host_bucket").count().collect()
     buckets = sorted(r.host_bucket for r in bucket_rows)
     # manifest count = the seeded FRONTIER (canonicalized, deduped,
@@ -514,7 +504,6 @@ def seed_crawl(spark: SparkSession, root: str, seeds, web: WebConfig,
     # raw pre-filter list length for the list path, as earlier rounds did,
     # made the same crawl seeded two ways write different manifests.)
     n_seeds = sum(r["count"] for r in bucket_rows)
-    _t = _trace("seed-plan", _t)
 
     d = _snap_dir(root, -1)
     # independent tables written concurrently, same pattern as the epoch
@@ -536,7 +525,6 @@ def seed_crawl(spark: SparkSession, root: str, seeds, web: WebConfig,
     frontier.unpersist()
     c_cached.unpersist()
     robots.unpersist()
-    _t = _trace("seed-writes", _t)
     with open(_manifest_path(root, -1), "w") as f:
         json.dump(
             {
@@ -817,29 +805,47 @@ def _assign_global_seq(spark: SparkSession, df: DataFrame) -> tuple[DataFrame, i
 # ---------------------------------------------------------------------------
 
 
-def _fetch_udf(web: WebConfig, fetch_adapter=None):
+def _fetch_udf(web: WebConfig, fetch_adapter=None,
+               scraper_plan: dict | None = None, emit_images: bool = False):
     """Arrow fetch stage.  ``fetch_adapter`` (crawl/fetchers.FetchAdapter)
     makes the transport injectable — the synthetic web by default, an
     HttpFetchAdapter for real deployments — without touching the epoch
-    loop; the adapter is pickled into the python workers."""
-    out_schema = T.StructType(
-        [
-            T.StructField("url_canon", T.StringType()),
-            T.StructField("host", T.StringType()),
-            T.StructField("host_bucket", T.IntegerType()),
-            T.StructField("seq", T.IntegerType()),
-            T.StructField("depth", T.IntegerType()),
-            T.StructField("status", T.IntegerType()),
-            T.StructField("n_links", T.IntegerType()),
-            T.StructField("n_images", T.IntegerType()),
-            T.StructField("page_fp", T.LongType()),
-            T.StructField("links", T.ArrayType(T.StringType())),
-        ]
-    )
+    loop; the adapter is pickled into the python workers.
+
+    This is the only place a crawled page is fetched.  With a
+    ``scraper_plan`` and/or ``emit_images`` it also parses each
+    status-200 body once (``operators.extract.page_payload``) and emits
+    ``value_json`` and/or the ``images`` metadata column — (src, caption,
+    w, h) only: the encoded image bytes are ~40x the rest of a fetched
+    row, so the codec runs downstream of the cache, at the table write.
+    Without either, no page is parsed."""
+    fields = [
+        T.StructField("url_canon", T.StringType()),
+        T.StructField("host", T.StringType()),
+        T.StructField("host_bucket", T.IntegerType()),
+        T.StructField("seq", T.IntegerType()),
+        T.StructField("depth", T.IntegerType()),
+        T.StructField("status", T.IntegerType()),
+        T.StructField("n_links", T.IntegerType()),
+        T.StructField("n_images", T.IntegerType()),
+        T.StructField("page_fp", T.LongType()),
+        T.StructField("links", T.ArrayType(T.StringType())),
+    ]
+    if scraper_plan:
+        fields.append(T.StructField("value_json", T.StringType()))
+    if emit_images:
+        fields.append(T.StructField("images", T.ArrayType(T.StructType([
+            T.StructField("src", T.StringType()),
+            T.StructField("caption", T.StringType()),
+            T.StructField("w", T.IntegerType()),
+            T.StructField("h", T.IntegerType()),
+        ]))))
+    out_schema = T.StructType(fields)
 
     def _fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from mlscraper_spark.crawl.fetchers import SynthWebAdapter
         from mlscraper_spark.crawl.urlnorm import content_fp
+        from mlscraper_spark.operators.extract import page_payload
 
         adapter = fetch_adapter or SynthWebAdapter(web)
         for pdf in batches:
@@ -855,10 +861,18 @@ def _fetch_udf(web: WebConfig, fetch_adapter=None):
                 # mirrors) hashes identically, which is what crawl-time
                 # content dedup keys on; non-200 bodies carry no content
                 page_fp = content_fp(bytes(html)) if status == 200 else None
-                rows.append(
-                    (url, host, int(hb), int(seq), int(depth), status,
-                     len(links), n_images, page_fp, links)
-                )
+                row = [url, host, int(hb), int(seq), int(depth), status,
+                       len(links), n_images, page_fp, links]
+                if scraper_plan or emit_images:
+                    value_json, images = (
+                        page_payload(html, scraper_plan, emit_images)
+                        if status == 200 else (None, None)
+                    )
+                    if scraper_plan:
+                        row.append(value_json)
+                    if emit_images:
+                        row.append(images)
+                rows.append(row)
             yield pd.DataFrame(
                 rows, columns=[f.name for f in out_schema.fields]
             )
@@ -1098,27 +1112,18 @@ def read_robots(spark: SparkSession, root: str, upto_epoch: int) -> DataFrame:
     )
 
 
-def _trace(label: str, t0: float) -> float:
-    import sys
-    import time
-
-    t = time.time()
-    if os.environ.get("SPARK_GRAFT_TRACE"):
-        print(f"[epoch-trace] {label}: {t - t0:.2f}s", file=sys.stderr)
-    return t
-
-
 # ---------------------------------------------------------------------------
 # the epoch
 # ---------------------------------------------------------------------------
 
 
 def run_epoch(spark: SparkSession, root: str, epoch: int, web: WebConfig,
-              cfg: CrawlConfig, fetch_adapter=None) -> int:
-    """Run one BSP epoch; returns number of URLs fetched."""
-    import time as _time
-
-    _t = _time.time()
+              cfg: CrawlConfig, fetch_adapter=None, *,
+              scraper_plan: dict | None = None,
+              emit_images: bool = False) -> int:
+    """Run one BSP epoch; returns number of URLs fetched.
+    ``scraper_plan``/``emit_images`` add the epoch's payload tables (see
+    ``run_crawl``)."""
     fmt = get_table_format(spark)
     prev = _snap_dir(root, epoch - 1)
     refs = _frontier_refs(root, epoch - 1)
@@ -1137,7 +1142,6 @@ def run_epoch(spark: SparkSession, root: str, epoch: int, web: WebConfig,
     # count() action; the selected cache materializes inside the fetch job
     selected, n_selected = _assign_global_seq(spark, pol)
     selected = selected.cache()
-    _t = _trace("select", _t)
     if n_selected == 0:
         selected.unpersist()
         pol.unpersist()
@@ -1151,8 +1155,8 @@ def run_epoch(spark: SparkSession, root: str, epoch: int, web: WebConfig,
     try:
         return _run_epoch_body(
             spark, root, epoch, web, cfg, refs, robots, filters,
-            url_seen, host_tokens, selected, n_selected, _caches, _t, fmt,
-            fetch_adapter,
+            url_seen, host_tokens, selected, n_selected, _caches, fmt,
+            fetch_adapter, scraper_plan, emit_images,
         )
     finally:
         for df_ in _caches:
@@ -1161,9 +1165,10 @@ def run_epoch(spark: SparkSession, root: str, epoch: int, web: WebConfig,
 
 def _run_epoch_body(spark, root, epoch, web, cfg, refs, robots, filters,
                     url_seen, host_tokens, selected, n_selected, _caches,
-                    _t, fmt, fetch_adapter=None):
+                    fmt, fetch_adapter, scraper_plan, emit_images):
     # ---- fetch + parse (S4, Arrow-batched, spread by url_hash) ---------
-    fetch_fn, fetch_schema = _fetch_udf(web, fetch_adapter)
+    fetch_fn, fetch_schema = _fetch_udf(web, fetch_adapter, scraper_plan,
+                                        emit_images)
     # Task count is a function of DATA SIZE (one task per ~50k URLs — the
     # maxPartitionBytes analog: bounds worst-case fetch-result memory per
     # python worker and retry re-fetch granularity), floored at the core
@@ -1186,14 +1191,6 @@ def _run_epoch_body(spark, root, epoch, web, cfg, refs, robots, filters,
         .cache()
     )
     _caches.append(fetched)
-    if os.environ.get("SPARK_GRAFT_TRACE"):
-        # trace-only materialization: attribute fetch separately.  The
-        # normal path lets the dirty/fingerprint collect below materialize
-        # this cache inside its own job — one fewer driver action per
-        # epoch (each action costs ~0.4-0.5 s of serial plan+submit, a
-        # cores-independent term the N-vs-4N ladder bills to the wide leg)
-        fetched.count()
-        _t = _trace("fetch+parse", _t)
 
     fetch_log = fetched.select(
         F.lit(epoch).alias("epoch"), "seq", "url_canon", "host",
@@ -1264,14 +1261,6 @@ def _run_epoch_body(spark, root, epoch, web, cfg, refs, robots, filters,
     )
     vetted = definitely_new.unionByName(survived).cache()
     _caches.append(vetted)
-    if os.environ.get("SPARK_GRAFT_TRACE"):
-        # sub-stage attribution (trace only; caches keep total work equal):
-        # discovery canonicalize + new-host robots, then cuckoo cogroup +
-        # exact anti-join vetting, then the dirty-bucket collect remainder
-        robots_new.count()
-        _t = _trace("plan-delta/canon+robots", _t)
-        vetted.count()
-        _t = _trace("plan-delta/cuckoo+vet", _t)
 
     # ---- delta merge: rewrite DIRTY buckets only -------------------------
     # ONE job collects both per-bucket facts the driver needs this epoch:
@@ -1299,7 +1288,6 @@ def _run_epoch_body(spark, root, epoch, web, cfg, refs, robots, filters,
         # chain stays short and old snapshots can be expired
         dirty = sorted(set(refs) | set(dirty))
         new_refs = {b: epoch for b in dirty}
-    _t = _trace("plan-delta", _t)
 
     old_dirty = read_frontier(spark, root, epoch - 1, buckets=dirty)
     frontier_dirty = (
@@ -1330,6 +1318,20 @@ def _run_epoch_body(spark, root, epoch, web, cfg, refs, robots, filters,
         (filters_new, "filters"),
         (metrics, "metrics"),
     ]
+    # payload tables come from the columns the fetch stage already
+    # emitted into the cached ``fetched`` frame: no second fetch or parse,
+    # and the manifest commits them atomically with the epoch
+    ok = fetched.filter(F.col("status") == 200)
+    if scraper_plan:
+        writes.append((ok.select("url_canon", "value_json"), "extractions"))
+    if emit_images:
+        from mlscraper_spark.images.ops import encode_images
+
+        writes.append((
+            encode_images(ok.select(F.explode("images").alias("im"))
+                          .select("im.*")),
+            "images",
+        ))
     # politeness token state — only when the bucket is non-degenerate
     # (cap == refill keeps this table nonexistent and costs nothing)
     cap, refill = _token_params(cfg)
@@ -1365,7 +1367,6 @@ def _run_epoch_body(spark, root, epoch, web, cfg, refs, robots, filters,
         for fut in futs:
             fut.result()  # propagate failures before the manifest exists
 
-    _t = _trace("snapshot-writes", _t)
     with open(_manifest_path(root, epoch), "w") as f:
         json.dump(
             {
@@ -1378,7 +1379,6 @@ def _run_epoch_body(spark, root, epoch, web, cfg, refs, robots, filters,
             },
             f,
         )
-    _t = _trace("manifest", _t)
     return n_selected
 
 
@@ -1429,64 +1429,28 @@ def run_crawl(spark: SparkSession, root: str, seeds, web: WebConfig,
     (tested): seeding canonicalizes + dedups, so source shape can't leak
     into snapshot content.
 
-    Optional per-epoch extraction stages (the north-star payload path —
-    fetch is a pure function of the URL, so these stages refetch rather
-    than persisting raw HTML in snapshots):
+    Optional per-epoch payload tables, derived by the epoch's fetch stage
+    from the bytes it fetched through ``fetch_adapter`` — each page is
+    fetched once and parsed at most once — and committed by the epoch's
+    manifest together with its other tables:
 
-    * ``scraper_plan``: apply a trained plan to every page fetched this
-      epoch → ``extractions`` table (url_canon, value_json);
+    * ``scraper_plan``: apply a trained plan to every status-200 page
+      fetched this epoch → ``extractions`` table (url_canon, value_json);
     * ``emit_images``: emit the input_hint images table
       (image_id, bytes, w, h, fmt, caption, phash) per epoch.
+
+    A resume must pass the same ``scraper_plan``/``emit_images`` as the
+    original run: epochs committed before the resume are not revisited.
     """
     last = last_complete_epoch(root)
     if last is None:
         seed_crawl(spark, root, seeds, web, cfg, fetch_adapter)
         last = -1
-    if scraper_plan or emit_images:
-        # backfill payload tables for already-complete epochs (a kill can
-        # land between the epoch manifest and its payload stages; fetch is
-        # a pure function, so re-deriving the payload is exact).  Commit
-        # detection goes through the TableFormat seam — an uncommitted
-        # (mid-kill) table must be redone whatever the storage format.
-        fmt = get_table_format(spark)
-        for e in range(0, last + 1):
-            d = _snap_dir(root, e)
-
-            def _complete(name):
-                return fmt.is_complete(spark, os.path.join(d, name))
-
-            missing = (scraper_plan and not _complete("extractions")) or (
-                emit_images and not _complete("images")
-            )
-            if missing and fmt.exists(spark, os.path.join(d, "fetch_log")):
-                _run_payload_stages(spark, root, e, web, scraper_plan,
-                                    emit_images)
     for epoch in range(last + 1, max_epochs):
-        n = run_epoch(spark, root, epoch, web, cfg, fetch_adapter)
+        n = run_epoch(spark, root, epoch, web, cfg, fetch_adapter,
+                      scraper_plan=scraper_plan, emit_images=emit_images)
         if n == 0:
             break
-        if n and (scraper_plan or emit_images):
-            _run_payload_stages(spark, root, epoch, web, scraper_plan,
-                                emit_images)
-
-
-def _run_payload_stages(spark: SparkSession, root: str, epoch: int,
-                        web: WebConfig, scraper_plan: dict | None,
-                        emit_images: bool) -> None:
-    fmt = get_table_format(spark)
-    d = _snap_dir(root, epoch)
-    urls = fmt.read(spark, [os.path.join(d, "fetch_log")], FETCHLOG_SCHEMA).filter(
-        F.col("status") == 200
-    ).select("url_canon")
-    if scraper_plan:
-        from mlscraper_spark.operators.extract import extract_from_urls
-
-        fmt.write(extract_from_urls(urls, scraper_plan, web),
-                  os.path.join(d, "extractions"))
-    if emit_images:
-        from mlscraper_spark.images.ops import fetch_and_extract_images
-
-        fmt.write(fetch_and_extract_images(urls, web), os.path.join(d, "images"))
 
 
 EXTRACTIONS_SCHEMA = "url_canon string, value_json string"

@@ -277,10 +277,9 @@ def _dim(value) -> int:
         return 0
 
 
-def extract_images(html: bytes) -> list[dict]:
-    """Document-order (src, caption, w, h) from <img> tags."""
-    from mlscraper_spark.dom.parser import parse_html
-
+def image_meta(records: list) -> list[dict]:
+    """Document-order (src, caption, w, h) from the <img> records of an
+    already-parsed page (``dom.parser.parse_html`` output)."""
     return [
         {
             "src": r.attrs.get("src", ""),
@@ -288,6 +287,13 @@ def extract_images(html: bytes) -> list[dict]:
             "w": _dim(r.attrs.get("width", 0)),
             "h": _dim(r.attrs.get("height", 0)),
         }
-        for r in parse_html(html)
+        for r in records
         if r.tag == "img"
     ]
+
+
+def extract_images(html: bytes) -> list[dict]:
+    """Document-order (src, caption, w, h) from <img> tags."""
+    from mlscraper_spark.dom.parser import parse_html
+
+    return image_meta(parse_html(html))

@@ -35,68 +35,80 @@ def default_fmt_policy(image_id: str, w: int, h: int) -> str:
     return "ppm" if xxhash64(image_id.encode()) % 2 == 0 else "dctq"
 
 
+def image_row(meta: dict, fmt_policy=default_fmt_policy) -> tuple:
+    """One ``IMAGES_SCHEMA`` row from one <img>'s (src, caption, w, h)
+    metadata: image_id = src path; pixels are materialized via the
+    deterministic synthetic store (make_image — the stand-in for the
+    binary fetch), encoded ppm (lossless) or dctq (lossy) as
+    ``fmt_policy(image_id, w, h)`` picks, phash computed from the
+    *decoded* pixels."""
+    from mlscraper_spark.images.codec import decode, encode, make_image, phash
+
+    image_id, w, h = meta["src"], meta["w"], meta["h"]
+    fmt = fmt_policy(image_id, w, h)
+    blob = encode(make_image(image_id, w, h), fmt)
+    return image_id, blob, w, h, fmt, meta["caption"], phash(decode(blob, fmt))
+
+
+def _rows_frame(rows: list[tuple]) -> pd.DataFrame:
+    return pd.DataFrame(rows, columns=[f.name for f in IMAGES_SCHEMA.fields])
+
+
+def encode_images(meta_df: DataFrame) -> DataFrame:
+    """(src, caption, w, h) rows → images rows under
+    ``default_fmt_policy``: the codec stage alone, no fetch and no parse
+    (the crawl's fetch stage already extracted the metadata)."""
+
+    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield _rows_frame([image_row(m) for m in pdf.to_dict("records")])
+
+    return meta_df.select("src", "caption", "w", "h").mapInPandas(
+        _run, IMAGES_SCHEMA
+    )
+
+
 def extract_images_table(pages_df: DataFrame, page_id_col: str = "url_canon",
                          html_col: str = "html", fmt_policy=None) -> DataFrame:
-    """Pages (id, html) → images rows per input_hint.
-
-    For each <img>: image_id = src path; pixels are materialized via the
-    deterministic synthetic store (make_image — the stand-in for the binary
-    fetch), encoded ppm (lossless) or dctq (lossy), phash computed from the
-    *decoded* pixels.  ``fmt_policy(image_id, w, h) -> fmt`` picks the
-    codec; the default is hash-parity of the id.  Oracle-checked queries
-    pass a SQL-expressible policy so the encoded byte counts are verifiable
+    """Pages (id, html) → images rows per input_hint, one ``image_row``
+    per <img>.  ``fmt_policy(image_id, w, h) -> fmt`` picks the codec;
+    the default is hash-parity of the id.  Oracle-checked queries pass a
+    SQL-expressible policy so the encoded byte counts are verifiable
     end-to-end against DuckDB (the codec itself is policy-independent).
     """
     policy = fmt_policy or default_fmt_policy
 
     def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from mlscraper_spark.crawl.synthweb import extract_images
-        from mlscraper_spark.images.codec import decode, encode, make_image, phash
+        from mlscraper_spark.operators.extract import page_payload
 
         for pdf in batches:
-            rows = []
-            for pid, html in zip(pdf[page_id_col], pdf[html_col]):
-                for im in extract_images(bytes(html)):
-                    image_id = im["src"]
-                    w, h = im["w"], im["h"]
-                    fmt = policy(image_id, w, h)
-                    img = make_image(image_id, w, h)
-                    blob = encode(img, fmt)
-                    ph = phash(decode(blob, fmt))
-                    rows.append((image_id, blob, w, h, fmt, im["caption"], ph))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in IMAGES_SCHEMA.fields]
-            )
+            yield _rows_frame([
+                image_row(m, policy)
+                for html in pdf[html_col]
+                for m in page_payload(bytes(html), None, True)[1]
+            ])
 
     return pages_df.select(page_id_col, html_col).mapInPandas(_run, IMAGES_SCHEMA)
 
 
 def fetch_and_extract_images(urls_df: DataFrame, web, url_col: str = "url_canon") -> DataFrame:
-    """Fused fetch → parse → images stage: one Arrow UDF, so raw HTML never
-    crosses the JVM↔Python boundary and each task runs exactly one Python
-    worker (two chained mapInPandas stages would run two workers per task —
-    measured ~20% scaling loss from core oversubscription)."""
+    """Fetch each URL from the synthetic web → images rows of its
+    status-200 pages, fetch + parse + codec in one Arrow UDF.  A crawl
+    does not call this: its fetch stage extracts the metadata from the
+    bytes it already fetched and ``encode_images`` runs the codec."""
 
     def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from mlscraper_spark.crawl.synthweb import extract_images, fetch
-        from mlscraper_spark.crawl.urlnorm import xxhash64
-        from mlscraper_spark.images.codec import decode, encode, make_image, phash
+        from mlscraper_spark.crawl.synthweb import fetch
+        from mlscraper_spark.operators.extract import page_payload
 
         for pdf in batches:
             rows = []
             for url in pdf[url_col]:
                 status, html = fetch(url, web)
-                if status != 200:
-                    continue
-                for im in extract_images(html):
-                    image_id = im["src"]
-                    w, h = im["w"], im["h"]
-                    fmt = "ppm" if xxhash64(image_id.encode()) % 2 == 0 else "dctq"
-                    img = make_image(image_id, w, h)
-                    blob = encode(img, fmt)
-                    ph = phash(decode(blob, fmt))
-                    rows.append((image_id, blob, w, h, fmt, im["caption"], ph))
-            yield pd.DataFrame(rows, columns=[f.name for f in IMAGES_SCHEMA.fields])
+                if status == 200:
+                    rows += [image_row(m)
+                             for m in page_payload(html, None, True)[1]]
+            yield _rows_frame(rows)
 
     return urls_df.select(url_col).mapInPandas(_run, IMAGES_SCHEMA)
 

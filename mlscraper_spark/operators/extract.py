@@ -16,6 +16,40 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 
+def page_payload(html: bytes | str, plan: dict | None,
+                 images: bool) -> tuple[str | None, list[dict]]:
+    """The per-page payload kernel: parse the page ONCE and derive what
+    was asked for from the same records — the plan's ``value_json``
+    (None without a plan) and the ``<img>`` metadata
+    (``synthweb.image_meta``; [] unless ``images``).
+
+    Convention across all extract operators: SQL NULL (None) means the
+    pipeline failed; the JSON string "null" means the plan ran and
+    extracted nothing.  A page the parser cannot hold (e.g. nesting deep
+    enough to exhaust the recursion limit) fails alone — one bad page
+    never fails a task."""
+    from mlscraper_spark.crawl.synthweb import image_meta
+    from mlscraper_spark.dom.css import PageDOM
+    from mlscraper_spark.dom.parser import parse_html
+    from mlscraper_spark.training.matches import PAGE_ROOT
+    from mlscraper_spark.training.scrapers import apply_plan
+
+    try:
+        records = parse_html(html)
+    except Exception:
+        return None, []
+    value_json = None
+    if plan is not None:
+        try:
+            value_json = json.dumps(
+                apply_plan(PageDOM(records), PAGE_ROOT, plan, strict=False),
+                sort_keys=True,
+            )
+        except Exception:
+            pass
+    return value_json, image_meta(records) if images else []
+
+
 def extract_with_plan(pages_df: DataFrame, plan: dict,
                       page_id_col: str = "page_id",
                       html_col: str = "html") -> DataFrame:
@@ -29,23 +63,10 @@ def extract_with_plan(pages_df: DataFrame, plan: dict,
     )
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from mlscraper_spark.training.scrapers import apply_plan_to_html
-
         p = json.loads(plan_json)
         for pdf in batches:
-            out = []
-            for page_id, html in zip(pdf[page_id_col], pdf[html_col]):
-                # convention across all extract operators: SQL NULL means
-                # the pipeline failed; the JSON string "null" means the
-                # plan ran and extracted nothing
-                try:
-                    out.append(
-                        (page_id,
-                         json.dumps(apply_plan_to_html(html, p, strict=False),
-                                    sort_keys=True))
-                    )
-                except Exception:
-                    out.append((page_id, None))
+            out = [(page_id, page_payload(html, p, False)[0])
+                   for page_id, html in zip(pdf[page_id_col], pdf[html_col])]
             yield pd.DataFrame(out, columns=["page_id", "value_json"])
 
     return pages_df.select(page_id_col, html_col).mapInPandas(_extract, schema)
@@ -53,10 +74,11 @@ def extract_with_plan(pages_df: DataFrame, plan: dict,
 
 def extract_from_urls(urls_df: DataFrame, plan: dict, web,
                       url_col: str = "url_canon") -> DataFrame:
-    """North-star hot path: fetched pages flow through one Arrow UDF that
-    applies a trained scraper plan — fetch + parse + extract fused, so HTML
-    never crosses the JVM↔Python boundary (same shape as
-    images/ops.fetch_and_extract_images)."""
+    """Fetch each URL from the synthetic web and apply a trained scraper
+    plan → (url_canon, value_json), fetch + parse + extract in one Arrow
+    UDF.  A non-200 fetch yields NULL.  A crawl does not call this: its
+    fetch stage runs the same ``page_payload`` kernel on the bytes it
+    already fetched (``crawl/engine.run_crawl``)."""
     plan_json = json.dumps(plan)
     schema = T.StructType(
         [
@@ -67,26 +89,15 @@ def extract_from_urls(urls_df: DataFrame, plan: dict, web,
 
     def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from mlscraper_spark.crawl.synthweb import fetch
-        from mlscraper_spark.training.scrapers import apply_plan_to_html
 
         p = json.loads(plan_json)
         for pdf in batches:
             out = []
             for url in pdf[url_col]:
-                # same NULL-vs-"null" convention as extract_with_plan:
-                # NULL = fetch/plan failure, "null" = extracted nothing
                 status, html = fetch(url, web)
-                if status != 200:
-                    out.append((url, None))
-                    continue
-                try:
-                    out.append(
-                        (url,
-                         json.dumps(apply_plan_to_html(html, p, strict=False),
-                                    sort_keys=True))
-                    )
-                except Exception:
-                    out.append((url, None))
+                out.append(
+                    (url, page_payload(html, p, False)[0] if status == 200 else None)
+                )
             yield pd.DataFrame(out, columns=["url_canon", "value_json"])
 
     return urls_df.select(url_col).mapInPandas(_run, schema)

@@ -16,9 +16,10 @@ Relational re-expression of ``Node.find_all``
   list-vs-str (never equal).
 * P4 dimensions filter: drop width/height attribute hits (samples.py:37).
 
-Scale notes: the values side is tiny (sample leaves) and is broadcast; the
-ancestor self-join stays within a page (equi-join on page_id, broadcast-able
-because match output is small); filters push to the parquet scan of nodes.
+Scale notes: the values side is tiny (sample leaves) and is broadcast; P2
+needs no join at all — the parser computes ``text_anc_ids`` where each
+page's DOM is local, so the ancestor branch is a per-row explode; filters
+push to the parquet scan of nodes.
 """
 from __future__ import annotations
 

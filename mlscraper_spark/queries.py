@@ -297,9 +297,13 @@ def q04_shuffle_join(spark, sf_dir):
 
     r6 shape (guide §2.3 "aggregate before you shuffle"): lineitem is
     pre-aggregated to one decimal revenue per orderkey BEFORE the join, so
-    the exchange moves |orders| rows instead of |lineitem| (4× fewer here,
-    ~arbitrarily fewer at web scale where orders average many lines), and
-    the join probe handles one row per key.  Decimal partial sums are
+    the join probe handles one row per key and the join's lineitem side
+    carries one row per order (4× fewer here, ~arbitrarily fewer at web
+    scale where orders average many lines).  The explicit
+    ``repartition(n, l_orderkey)`` still moves every raw lineitem row:
+    it is planned before the aggregation, whose partial and final steps
+    then both run after it on its hash partitioning (no map-side
+    pre-aggregation shrinks that exchange).  Decimal partial sums are
     exact and associative, so sum-of-per-key-sums == the flat sum
     bit-for-bit (oracle parity pinned; measured 0.89 → 0.64 s)."""
     n = spark.sparkContext.defaultParallelism
@@ -1982,15 +1986,15 @@ def _q45_setup():
 
 def q45_crawl_extract(spark, sf_dir):
     """Trained-scraper inference INSIDE the crawl loop (north_star fusion):
-    ``run_crawl(scraper_plan=...)`` applies the broadcast plan to every
-    page fetched in an epoch, in that epoch's payload stage, writing the
+    ``run_crawl(scraper_plan=...)`` applies the plan to every page the
+    epoch's fetch stage fetched, on the bytes it fetched, writing the
     ``extractions`` table next to the fetch log.  Output is one row per
     crawled page with its extracted JSON — the driver hash covers the
     exact (url set, values) the fused pipeline produced.
 
-    Scale shape: extraction is one Arrow stage over the epoch's fetched
-    URLs (fetch+parse+extract fused, HTML never crosses into the JVM),
-    zero extra shuffle; the crawl itself is the ladder-measured engine.
+    Scale shape: extraction runs inside the crawl's fetch stage
+    (fetch+parse+extract fused, HTML never crosses into the JVM), zero
+    extra shuffle; the crawl itself is the ladder-measured engine.
     ``sf_dir`` is unused — the input is the deterministic synthetic web,
     the same corpus the bit-for-bit crawl tests pin."""
     import tempfile

@@ -20,12 +20,11 @@ from pyspark.sql import DataFrame, SparkSession
 
 class TableFormat:
     """Write/read one logical table at a path (or several paths — the
-    append-only tables are unions of per-epoch deltas), plus the two
-    probes the epoch loop needs: ``exists`` (was this table ever
-    written?) and ``is_complete`` (did its write COMMIT?).  Keeping the
-    probes behind the seam is what lets the Iceberg variant drop in
-    without touching the loop — parquet's ``_SUCCESS`` marker is a
-    parquet detail, not an engine concept."""
+    append-only tables are unions of per-epoch deltas), plus the probe
+    the epoch loop needs: ``exists`` (was this table ever written?).
+    Keeping the probe behind the seam is what lets the Iceberg variant
+    drop in without touching the loop.  Whether a snapshot's tables
+    committed is the engine's epoch manifest's job, not the format's."""
 
     def write(self, df: DataFrame, path: str, mode: str = "overwrite") -> None:
         raise NotImplementedError
@@ -63,9 +62,6 @@ class TableFormat:
     def exists(self, spark: SparkSession, path: str) -> bool:
         raise NotImplementedError
 
-    def is_complete(self, spark: SparkSession, path: str) -> bool:
-        raise NotImplementedError
-
 
 class ParquetSnapshotFormat(TableFormat):
     def write(self, df: DataFrame, path: str, mode: str = "overwrite") -> None:
@@ -80,12 +76,17 @@ class ParquetSnapshotFormat(TableFormat):
         # reader schemas agree with seam-written non-empty deltas.
         import os
         import shutil
+        from urllib.parse import urlsplit
 
         import pyarrow as pa
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import to_arrow_schema
         from pyspark.sql.types import _parse_datatype_string
 
+        if urlsplit(path).scheme:
+            # file:, hdfs://, s3a://... are not local paths the os calls
+            # below can write: commit through the base class's Spark write
+            return super().write_empty(spark, path, schema)
         aschema = to_arrow_schema(_parse_datatype_string(schema))
         if os.path.isdir(path):
             shutil.rmtree(path)  # overwrite semantics, as the job path
@@ -119,13 +120,6 @@ class ParquetSnapshotFormat(TableFormat):
         import os
 
         return os.path.isdir(path)
-
-    def is_complete(self, spark: SparkSession, path: str) -> bool:
-        # _SUCCESS is the Hadoop committer's atomic marker: present iff
-        # every task of the write committed
-        import os
-
-        return os.path.exists(os.path.join(path, "_SUCCESS"))
 
 
 class IcebergSnapshotFormat(TableFormat):
@@ -174,11 +168,6 @@ class IcebergSnapshotFormat(TableFormat):
         for p in paths[1:]:
             out = out.unionByName(_one(p))
         return out
-
-    def is_complete(self, spark: SparkSession, path: str) -> bool:
-        # Iceberg writes are atomic at the snapshot level: a loadable
-        # table IS a committed table
-        return self.exists(spark, path)
 
 
 def expand_glob(spark: SparkSession, path: str) -> list[str]:

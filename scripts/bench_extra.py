@@ -21,16 +21,7 @@ from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-HEADLINE = [
-    "q01_pricing_summary",
-    "q04_shuffle_join",
-    "q05_topk_per_group",
-    "q19_minhash_lsh_pairs",
-    "q21_cosine_topk",
-    "q23_extract_scraper",
-    "q24_match_scan",
-    "q29_ann_ivf",
-]
+from bench import HEADLINE  # noqa: E402
 
 
 def main():

@@ -611,17 +611,37 @@ def test_write_empty_matches_job_write(spark, tmp_path):
     job = str(tmp_path / "job")
     fmt.write_empty(spark, fast, FETCHLOG_SCHEMA)
     fmt.write(spark.createDataFrame([], FETCHLOG_SCHEMA), job)
-    assert fmt.is_complete(spark, fast) and fmt.is_complete(spark, job)
+    for p in (fast, job):
+        assert os.path.isfile(os.path.join(p, "_SUCCESS"))
     a = fmt.read(spark, [fast], FETCHLOG_SCHEMA)
     b = fmt.read(spark, [job], FETCHLOG_SCHEMA)
     assert a.columns == b.columns and a.count() == 0 == b.count()
-    # schema-less read must infer the same columns from the empty part
-    inferred = spark.read.parquet(fast)
-    assert inferred.columns == b.columns
+    # schema-less read must infer the same fields, types included, from
+    # the empty part
+    assert spark.read.parquet(fast).schema == b.schema
     # overwrite semantics: a second write_empty replaces the dir
     fmt.write_empty(spark, fast, FETCHLOG_SCHEMA)
-    assert fmt.is_complete(spark, fast)
     assert os.path.isfile(os.path.join(fast, "_SUCCESS"))
+
+
+def test_write_empty_uri_path_uses_spark_write(spark, tmp_path):
+    """A path with a URI scheme is not a local path: write_empty must
+    commit it through Spark's write, not the driver-side os calls (which
+    would create a literal 'file:' directory and leave the target
+    missing)."""
+    import os
+
+    from mlscraper_spark.crawl.engine import FETCHLOG_SCHEMA
+    from mlscraper_spark.tables import ParquetSnapshotFormat
+
+    target = tmp_path / "uri"
+    fmt = ParquetSnapshotFormat()
+    fmt.write_empty(spark, f"file://{target}", FETCHLOG_SCHEMA)
+    assert os.path.isfile(os.path.join(target, "_SUCCESS"))
+    back = fmt.read(spark, [f"file://{target}"], FETCHLOG_SCHEMA)
+    assert back.count() == 0 and back.columns == [
+        f.name for f in spark.createDataFrame([], FETCHLOG_SCHEMA).schema
+    ]
 
 
 def test_table_format_seam_contract(spark, tmp_path, oracle_state):
