@@ -48,6 +48,7 @@ from __future__ import annotations
 import json
 import os
 import re
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from typing import Iterator
 
@@ -59,7 +60,7 @@ from pyspark.sql import types as T
 
 from mlscraper_spark.crawl.fetchers import SynthWebAdapter
 from mlscraper_spark.crawl.synthweb import WebConfig
-from mlscraper_spark.tables import TableFormat, get_table_format
+from mlscraper_spark.tables import get_table_format
 
 FRONTIER_SCHEMA = (
     "url_canon string, url_hash long, host string, host_bucket int, "
@@ -185,7 +186,8 @@ def read_frontier(spark: SparkSession, root: str, epoch: int,
     fmt = get_table_format(spark)
     refs = _frontier_refs(root, epoch)
     if buckets is not None:
-        refs = {b: e for b, e in refs.items() if b in set(buckets)}
+        keep = set(buckets)
+        refs = {b: e for b, e in refs.items() if b in keep}
     by_epoch: dict[int, list[int]] = {}
     for b, e in refs.items():
         by_epoch.setdefault(e, []).append(b)
@@ -233,13 +235,6 @@ def _trap_filter(df: DataFrame, cfg: CrawlConfig) -> DataFrame:
 _IDENTITY_COLS = (
     "url_canon", "url_hash", "host", "host_bucket", "depth", "discovered_epoch",
 )
-
-
-def _collect_fingerprints(filters_df: DataFrame) -> dict:
-    return {
-        str(r.host_bucket): r.fingerprint
-        for r in filters_df.select("host_bucket", "fingerprint").collect()
-    }
 
 
 # --- JVM canonicalization (F11 hot path) -----------------------------------
@@ -424,25 +419,101 @@ def canonicalize_frame(df: DataFrame, raw_col: str) -> DataFrame:
     )
 
 
-def _write_frontier(fmt: TableFormat, df: DataFrame, snap: str,
-                    n_buckets: int) -> None:
+def _frontier_rows(df: DataFrame) -> DataFrame:
+    """Frontier table rows from identity-column rows: adds the derived
+    priority, in FRONTIER_SCHEMA's column order."""
+    return df.withColumn("priority", _priority_col()).select(
+        "url_canon", "url_hash", "host", "host_bucket", "priority", "depth",
+        "discovered_epoch",
+    )
+
+
+def _frontier_layout(df: DataFrame, n_buckets: int) -> DataFrame:
     """Frontier files are repartitioned by host_bucket (one bucket never
     spans tasks → tight file stats for bucket-pruned reads) and sorted by
     the politeness order within partitions so phase-1 top-k scans
     pre-sorted runs."""
-    fmt.write(
-        df.repartition(n_buckets, "host_bucket").sortWithinPartitions(
-            "host", F.desc("priority"), F.asc("url_hash"), F.asc("url_canon")
-        ),
-        os.path.join(snap, "frontier"),
+    return df.repartition(n_buckets, "host_bucket").sortWithinPartitions(
+        "host", F.desc("priority"), F.asc("url_hash"), F.asc("url_canon")
     )
+
+
+def _commit_snapshot(spark: SparkSession, root: str, epoch: int,
+                     writes: list, empties: list, manifest: dict) -> None:
+    """Write the snapshot after ``epoch``: every ``(df, name)`` in
+    ``writes`` and every zero-row ``(name, schema)`` in ``empties`` as
+    concurrent seam writes, then the manifest.  The manifest is the
+    atomic completion marker: it is written only after every table write
+    has returned, so a failed write leaves no manifest and a resume redoes
+    the epoch.  Zero-row tables commit through ``write_empty`` — the
+    parquet variant does it driver-side (a zero-row Spark job costs
+    ~0.5 s of pure scheduling, measured r6)."""
+    fmt = get_table_format(spark)
+    d = _snap_dir(root, epoch)
+    with ThreadPoolExecutor(max_workers=len(writes) + len(empties)) as pool:
+        futs = [pool.submit(fmt.write, df, os.path.join(d, name))
+                for df, name in writes]
+        futs += [pool.submit(fmt.write_empty, spark, os.path.join(d, name),
+                             schema)
+                 for name, schema in empties]
+        for fut in futs:
+            fut.result()  # propagate failures before the manifest exists
+    with open(_manifest_path(root, epoch), "w") as f:
+        json.dump(manifest, f)
+
+
+def _discover(spark: SparkSession, rows: DataFrame, epoch: int,
+              robots: DataFrame | None, cfg: CrawlConfig, adapter,
+              caches: list) -> tuple[DataFrame, DataFrame]:
+    """The URLs found in ``epoch`` as candidates for the next epoch:
+    canonicalize the ``(depth, raw)`` rows, drop unparseable and trapped
+    URLs, resolve robots for the hosts ``robots`` does not hold yet
+    (``None``: no host is known — seeding, epoch -1) and drop what robots
+    blocks.  The oracle inserts seeds and links through the same steps.
+
+    Returns ``(candidates, robots_new)``: candidates carry
+    ``_IDENTITY_COLS`` with ``discovered_epoch = epoch + 1`` and may
+    repeat a URL; ``robots_new`` rows carry ``fetched_epoch = epoch + 1``.
+    Both caches it creates are appended to ``caches`` for the caller to
+    release."""
+    # The cache sits DIRECTLY on the canonicalize output and every filter
+    # sits above it: a filter below would have the masked canonicalize
+    # projection inlined into its FilterExec condition (pushdown
+    # substitutes the alias), and FilterExec does no subexpression
+    # elimination — the gate tree re-evaluates per conjunct reference
+    # (measured ~9 s/epoch at 4M links, r6).  Above the cache the filters
+    # test stored columns.  The cache is also why canonicalize runs once
+    # for its two consumers (the robots host scan + the candidate
+    # pipeline).  path rides along so the robots filter can test it
+    # directly instead of re-deriving it with a per-row parse_url.
+    canon = canonicalize_frame(rows, "raw").select(
+        "depth", "url_canon", "host", "path"
+    ).cache()
+    caches.append(canon)
+    # an unparseable URL is dropped, never a phantom null-host frontier
+    # row; the trap guard runs BEFORE robots: a trapped URL must not
+    # trigger a robots fetch for its host (oracle order)
+    disc = _trap_filter(canon.filter(F.col("url_canon").isNotNull()), cfg)
+    hosts = disc.select("host")
+    if robots is not None:
+        hosts = hosts.join(robots.select("host"), "host", "left_anti")
+    # cache: robots_new feeds the robots filter below AND the snapshot
+    robots_new = _robots_rules_df(spark, hosts, epoch + 1, adapter).cache()
+    caches.append(robots_new)
+    known = robots_new if robots is None else robots.unionByName(robots_new)
+    disc = _filter_robots(disc, known, adapter)
+    return _with_host_bucket(disc, cfg).withColumns({
+        "url_hash": F.xxhash64("url_canon"),
+        "discovered_epoch": F.lit(epoch + 1),
+    }).select(*_IDENTITY_COLS), robots_new
 
 
 def seed_crawl(spark: SparkSession, root: str, seeds, web: WebConfig,
                cfg: CrawlConfig, fetch_adapter=None) -> None:
     """Write the epoch=-1 snapshot: seeded frontier, empty everything else.
-    ``fetch_adapter`` supplies robots resolution for the seed hosts (same
-    seam as the epoch loop's fetch stage).
+    Seeds are epoch -1's discoveries at depth 0: they go through the
+    epoch's discovery stage (``_discover``), robots resolved by
+    ``fetch_adapter`` (the same seam as the epoch loop's fetch stage).
 
     ``seeds`` is either a ``list[str]`` (small, driver-resident — tests and
     interactive use) or a single-string-column ``DataFrame`` (the scale
@@ -451,89 +522,43 @@ def seed_crawl(spark: SparkSession, root: str, seeds, web: WebConfig,
     embedded into every task binary — ~8 MB at 1.2M seeds, a
     cores-independent cost the N-vs-4N ladder measures directly)."""
     adapter = fetch_adapter or SynthWebAdapter(web)
-    fmt = get_table_format(spark)
     if isinstance(seeds, DataFrame):
         raw = seeds.select(F.col(seeds.columns[0]).cast("string").alias("raw"))
     else:
         # Arrow path (one pandas column), not createDataFrame(list-of-tuples):
         # row-by-row conversion serializes the whole seed list on the DRIVER —
         # a cores-independent cost that at ladder widths (300k-1.2M seeds)
-        # dominates the seed snapshot and drags the N-vs-4N efficiency ratio
-        # explicit schema: an empty seed list otherwise breaks inference
-        # (pandas object column with no rows → "can not infer schema")
+        # dominates the seed snapshot and drags the N-vs-4N efficiency ratio.
+        # Explicit schema: an empty seed list otherwise breaks inference
+        # (pandas object column with no rows → "can not infer schema").
         raw = spark.createDataFrame(pd.DataFrame({"raw": seeds}),
                                     schema="raw string")
-    # cache: the canonicalized seed set feeds BOTH the robots host scan and
-    # the frontier build — uncached, the canonicalize UDF pipeline re-runs
-    # for every consumer (measured 3× on the seed path).  The null filter
-    # sits ABOVE the cache on purpose: a filter below it would have the
-    # masked canonicalize projection inlined into its FilterExec condition
-    # (predicate pushdown substitutes the alias), and FilterExec performs
-    # no subexpression elimination — the whole gate tree re-evaluates per
-    # conjunct reference (measured ~9 s/epoch at 4M links, r6); above the
-    # cache it tests the STORED column.
-    c_cached = canonicalize_frame(raw, "raw").select(
-        "url_canon", "host", "path"
-    ).cache()
-    c = c_cached.filter(
-        F.col("url_canon").isNotNull()  # same policy as discoveries: an
-        # unparseable seed is dropped (oracle does the same), never a
-        # phantom null-host frontier row
+    caches: list[DataFrame] = []
+    cand, robots = _discover(
+        spark, raw.select(F.lit(0).alias("depth"), "raw"), -1, None, cfg,
+        adapter, caches,
     )
-    frontier = (
-        _with_host_bucket(c, cfg)
-        .withColumn("url_hash", F.xxhash64("url_canon"))
-        .withColumn("depth", F.lit(0))
-        .withColumn("discovered_epoch", F.lit(0))
-        .withColumn("priority", _priority_col())
-    )
-    frontier = _trap_filter(frontier, cfg)  # before robots: a trapped
-    # seed must not trigger a robots fetch for its host (oracle order)
-    # cache: robots is broadcast into the frontier filter AND written below
-    robots = _robots_rules_df(spark, frontier.select("host").distinct(), 0,
-                              adapter).cache()
-    frontier = _filter_robots(frontier, robots, adapter).select(
-        "url_canon", "url_hash", "host", "host_bucket",
-        "priority", "depth", "discovered_epoch",
-    ).dropDuplicates(["url_canon"]).cache()
+    frontier = _frontier_rows(cand).dropDuplicates(["url_canon"]).cache()
+    caches.append(frontier)
     bucket_rows = frontier.groupBy("host_bucket").count().collect()
-    buckets = sorted(r.host_bucket for r in bucket_rows)
-    # manifest count = the seeded FRONTIER (canonicalized, deduped,
-    # robots-filtered) for BOTH seed sources — it falls out of the bucket
-    # collect above, so neither path costs an extra action.  (Recording the
-    # raw pre-filter list length for the list path, as earlier rounds did,
-    # made the same crawl seeded two ways write different manifests.)
-    n_seeds = sum(r["count"] for r in bucket_rows)
-
-    d = _snap_dir(root, -1)
-    # independent tables written concurrently, same pattern as the epoch
-    # snapshot (the manifest below is the atomic completion marker)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        futs = [
-            pool.submit(_write_frontier, fmt, frontier, d, cfg.n_buckets),
-            pool.submit(fmt.write, robots, os.path.join(d, "robots_delta")),
-        ]
-        # zero-row tables commit through the seam's write_empty — the
-        # parquet variant does it driver-side (no Spark job; a zero-row
-        # job costs ~0.5 s each of pure scheduling, measured r6)
-        fmt.write_empty(spark, os.path.join(d, "url_seen_delta"), SEEN_SCHEMA)
-        fmt.write_empty(spark, os.path.join(d, "filters"), FILTERS_SCHEMA)
-        for fut in futs:
-            fut.result()
-    frontier.unpersist()
-    c_cached.unpersist()
-    robots.unpersist()
-    with open(_manifest_path(root, -1), "w") as f:
-        json.dump(
-            {
-                "epoch": -1,
-                "seeds": n_seeds,
-                "frontier_refs": {str(b): -1 for b in buckets},
+    # the manifest records the seeded FRONTIER (canonicalized, deduped,
+    # robots-filtered), so the same seeds given as a list or as a
+    # DataFrame write the same manifest; it falls out of the bucket collect
+    _commit_snapshot(
+        spark, root, -1,
+        [(_frontier_layout(frontier, cfg.n_buckets), "frontier"),
+         (robots, "robots_delta")],
+        [("url_seen_delta", SEEN_SCHEMA), ("filters", FILTERS_SCHEMA)],
+        {
+            "epoch": -1,
+            "seeds": sum(r["count"] for r in bucket_rows),
+            "frontier_refs": {
+                str(b): -1 for b in sorted(r.host_bucket for r in bucket_rows)
             },
-            f,
-        )
+        },
+    )
+    for df_ in caches:
+        df_.unpersist()
 
 
 def _robots_rules_df(spark: SparkSession, hosts_df: DataFrame, epoch: int,
@@ -710,7 +735,7 @@ def _politeness_select(frontier: DataFrame, cfg: CrawlConfig,
     top-k over that small union, joined with the (small) host-token state
     — yields exactly the oracle's selection.  The frontier itself is never
     exchanged; when stored buckets keep hosts partition-local (the layout
-    ``_write_frontier`` produces), phase 1 already emits the exact answer
+    ``_frontier_layout`` produces), phase 1 already emits the exact answer
     and phase 2's shuffle moves only ~capacity×hosts rows."""
     cap, refill = _token_params(cfg)
     budget = cap
@@ -1121,298 +1146,200 @@ def run_epoch(spark: SparkSession, root: str, epoch: int, web: WebConfig,
               cfg: CrawlConfig, fetch_adapter=None, *,
               scraper_plan: dict | None = None,
               emit_images: bool = False) -> int:
-    """Run one BSP epoch; returns number of URLs fetched.
+    """Run one BSP epoch; returns number of URLs fetched.  0 means the
+    frontier is drained: nothing is fetched and no snapshot is written,
+    so the crawl ends at the previous snapshot (an empty frontier never
+    refills — every host with a frontier row has at least one token).
     ``scraper_plan``/``emit_images`` add the epoch's payload tables (see
     ``run_crawl``)."""
     fmt = get_table_format(spark)
-    prev = _snap_dir(root, epoch - 1)
+    adapter = fetch_adapter or SynthWebAdapter(web)
     refs = _frontier_refs(root, epoch - 1)
-    frontier = read_frontier(spark, root, epoch - 1)
-    robots = read_robots(spark, root, epoch - 1)
-    filters = fmt.read(spark, [os.path.join(prev, "filters")], FILTERS_SCHEMA)
-    url_seen = read_url_seen(spark, root, epoch - 1)
     host_tokens = read_host_tokens(spark, root, epoch - 1)
 
     # ---- politeness top-k (T6) + global fetch order --------------------
     # the politeness output is cached BEFORE seq assignment: the seq
     # offsets collect inside _assign_global_seq materializes this cache,
     # so the frontier scan + two-phase top-k run exactly once per epoch
-    pol = _politeness_select(frontier, cfg, host_tokens).cache()
+    pol = _politeness_select(
+        read_frontier(spark, root, epoch - 1), cfg, host_tokens
+    ).cache()
     # n_selected falls out of the seq-offsets collect — no separate
     # count() action; the selected cache materializes inside the fetch job
     selected, n_selected = _assign_global_seq(spark, pol)
     selected = selected.cache()
-    if n_selected == 0:
-        selected.unpersist()
-        pol.unpersist()
-        _write_empty_epoch(spark, root, epoch, refs, robots, filters,
-                           host_tokens, cfg, fmt)
-        return 0
-
-    # caches created below are released in the finally block even when a
-    # stage throws (long sessions run many crawls)
-    _caches = [selected, pol]
+    # every cache is released in the finally block, also when a stage
+    # throws (long sessions run many crawls)
+    caches = [selected, pol]
     try:
-        return _run_epoch_body(
-            spark, root, epoch, web, cfg, refs, robots, filters,
-            url_seen, host_tokens, selected, n_selected, _caches, fmt,
-            fetch_adapter, scraper_plan, emit_images,
+        if n_selected == 0:
+            return 0
+
+        # ---- fetch + parse (S4, Arrow-batched, spread by url_hash) -----
+        fetch_fn, fetch_schema = _fetch_udf(web, fetch_adapter, scraper_plan,
+                                            emit_images)
+        # Task count is a function of DATA SIZE (one task per ~50k URLs —
+        # the maxPartitionBytes analog: bounds worst-case fetch-result
+        # memory per python worker and retry re-fetch granularity),
+        # floored at the core count so a small epoch still uses the whole
+        # cluster.  Data-sized, not cores×K-sized, because every python
+        # task carries a measured ~0.2-0.3 s of fixed overhead (Arrow
+        # stream + worker round-trip): a 4-waves-per-core policy made the
+        # per-epoch overhead GROW with cluster width — the N-vs-4N ladder
+        # bills that directly to the wide side.  Partition count never
+        # changes results (politeness is enforced upstream), only task
+        # granularity.
+        n_fetch = max(spark.sparkContext.defaultParallelism,
+                      n_selected // 50_000 + 1)
+        if cfg.fetch_partitions is not None:
+            n_fetch = min(cfg.fetch_partitions, n_fetch)
+        fetched = (
+            selected.select("url_canon", "url_hash", "host", "host_bucket",
+                            "seq", "depth")
+            .repartition(n_fetch, "url_hash")
+            .drop("url_hash")
+            .mapInPandas(fetch_fn, fetch_schema)
+            .cache()
         )
-    finally:
-        for df_ in _caches:
-            df_.unpersist()
+        caches.append(fetched)
 
-
-def _run_epoch_body(spark, root, epoch, web, cfg, refs, robots, filters,
-                    url_seen, host_tokens, selected, n_selected, _caches,
-                    fmt, fetch_adapter, scraper_plan, emit_images):
-    # ---- fetch + parse (S4, Arrow-batched, spread by url_hash) ---------
-    fetch_fn, fetch_schema = _fetch_udf(web, fetch_adapter, scraper_plan,
-                                        emit_images)
-    # Task count is a function of DATA SIZE (one task per ~50k URLs — the
-    # maxPartitionBytes analog: bounds worst-case fetch-result memory per
-    # python worker and retry re-fetch granularity), floored at the core
-    # count so a small epoch still uses the whole cluster.  Data-sized,
-    # not cores×K-sized, because every python task carries a measured
-    # ~0.2-0.3 s of fixed overhead (Arrow stream + worker round-trip):
-    # a 4-waves-per-core policy made the per-epoch overhead GROW with
-    # cluster width — the N-vs-4N ladder bills that directly to the wide
-    # side.  Partition count never changes results (politeness is
-    # enforced upstream), only task granularity.
-    n_fetch = max(spark.sparkContext.defaultParallelism,
-                  n_selected // 50_000 + 1)
-    if cfg.fetch_partitions is not None:
-        n_fetch = min(cfg.fetch_partitions, n_fetch)
-    fetched = (
-        selected.select("url_canon", "url_hash", "host", "host_bucket", "seq", "depth")
-        .repartition(n_fetch, "url_hash")
-        .drop("url_hash")
-        .mapInPandas(fetch_fn, fetch_schema)
-        .cache()
-    )
-    _caches.append(fetched)
-
-    fetch_log = fetched.select(
-        F.lit(epoch).alias("epoch"), "seq", "url_canon", "host",
-        "status", "n_links", "n_images", "page_fp",
-    )
-
-    # ---- discoveries: canonicalize, robots-filter, dedup (F11/J8) ------
-    raw_links = fetched.select(
-        (F.col("depth") + 1).alias("depth"), F.explode("links").alias("raw")
-    )
-    # The cache sits DIRECTLY on the canonicalize output and every filter
-    # sits above it: a filter below would have the masked canonicalize
-    # projection inlined into its FilterExec condition (pushdown
-    # substitutes the alias), and FilterExec does no subexpression
-    # elimination — the gate tree re-evaluates per conjunct reference
-    # (measured ~9 s/epoch at 4M links, r6).  Above the cache the filters
-    # test stored columns.  The cache is also why canonicalize runs once
-    # for its two consumers (robots_new host anti-join + the delta
-    # pipeline).  path rides along so the robots filter can test it
-    # directly instead of re-deriving it with a per-row parse_url.
-    disc0 = canonicalize_frame(raw_links, "raw").select(
-        "depth", "url_canon", "host", "path"
-    ).cache()
-    _caches.append(disc0)
-    disc = _trap_filter(  # trap guard BEFORE robots: a trapped URL must
-        # not trigger a robots fetch for its host
-        disc0.filter(F.col("url_canon").isNotNull()), cfg
-    )
-    robots_new = _robots_rules_df(
-        spark,
-        disc.select("host").join(robots.select("host"), "host", "left_anti"),
-        epoch + 1,
-        fetch_adapter or SynthWebAdapter(web),
-    ).cache()
-    _caches.append(robots_new)
-    robots_all = robots.unionByName(robots_new)
-    disc = _filter_robots(disc, robots_all, fetch_adapter or SynthWebAdapter(web))
-    disc = _with_host_bucket(disc, cfg).withColumn(
-        "url_hash", F.xxhash64("url_canon")
-    ).withColumn("discovered_epoch", F.lit(epoch + 1))
-    # within-epoch dedup happens INSIDE the seen-check cogroup (same
-    # host_bucket key — saves a full groupBy(url_canon) exchange of the
-    # raw delta); column order fixed here so the cogroup's output schema
-    # is stable
-    adds = disc.select(*_IDENTITY_COLS)
-
-    # ---- url_seen delta + cuckoo update (P10/E5) ------------------------
-    seen_delta = selected.select(
-        "url_canon", "url_hash", "host_bucket", F.lit(epoch).alias("seen_epoch")
-    )
-    url_seen_all = url_seen.unionByName(seen_delta)
-    # ---- fused cuckoo update + seen-check of the DELTA only (P10/E5) ----
-    # cache: the single cogroup output feeds the filters snapshot, the
-    # fingerprint collect, AND both flag branches — without it the whole
-    # discovery pipeline + blob rebuild would run once per consumer
-    fused = _update_and_split(filters, seen_delta, adds, cfg).cache()
-    _caches.append(fused)
-    filters_new = fused.filter(F.col("kind") == "f").select(
-        "host_bucket", "blob", "fingerprint"
-    )
-    flagged = fused.filter(F.col("kind") == "c").drop(
-        "blob", "fingerprint", "kind"
-    )
-    definitely_new = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
-    maybe = flagged.filter(F.col("maybe_seen")).drop("maybe_seen")
-    survived = maybe.join(
-        url_seen_all.select("url_canon"), "url_canon", "left_anti"
-    )
-    vetted = definitely_new.unionByName(survived).cache()
-    _caches.append(vetted)
-
-    # ---- delta merge: rewrite DIRTY buckets only -------------------------
-    # ONE job collects both per-bucket facts the driver needs this epoch:
-    # the dirty-bucket set (selected ∪ vetted markers, fingerprint NULL)
-    # and the manifest's filter fingerprints ('f' rows) — previously two
-    # collects ~0.5 s of serial driver time apart.  All inputs are cached
-    # (or derive from caches), so the union scans caches; O(buckets) rows.
-    _null_fp = F.lit(None).cast("string").alias("fingerprint")
-    bucket_info = (
-        selected.select("host_bucket", _null_fp)
-        .unionByName(vetted.select("host_bucket", _null_fp))
-        .unionByName(filters_new.select("host_bucket", "fingerprint"))
-        .distinct()
-        .collect()
-    )
-    dirty = sorted({r.host_bucket for r in bucket_info
-                    if r.fingerprint is None})
-    fingerprints = {str(r.host_bucket): r.fingerprint for r in bucket_info
-                    if r.fingerprint is not None}
-    new_refs = {b: e for b, e in refs.items()}
-    for b in dirty:
-        new_refs[b] = epoch
-    if len(set(new_refs.values())) > cfg.max_ref_span:
-        # compaction: rewrite every bucket into this snapshot so the ref
-        # chain stays short and old snapshots can be expired
-        dirty = sorted(set(refs) | set(dirty))
-        new_refs = {b: epoch for b in dirty}
-
-    old_dirty = read_frontier(spark, root, epoch - 1, buckets=dirty)
-    frontier_dirty = (
-        _merge_frontier_delta(old_dirty, vetted, selected)
-        .withColumn("priority", _priority_col())
-        .select(
-            "url_canon", "url_hash", "host", "host_bucket", "priority",
-            "depth", "discovered_epoch",
+        # ---- discoveries: canonicalize, trap, robots (F11/J8) ----------
+        robots = read_robots(spark, root, epoch - 1)
+        # within-epoch dedup happens INSIDE the seen-check cogroup (same
+        # host_bucket key — saves a full groupBy(url_canon) exchange of
+        # the raw delta)
+        adds, robots_new = _discover(
+            spark,
+            fetched.select((F.col("depth") + 1).alias("depth"),
+                           F.explode("links").alias("raw")),
+            epoch, robots, cfg, adapter, caches,
         )
-    )
 
-    # ---- metrics (A8) ----------------------------------------------------
-    metrics = fetched.groupBy("host_bucket").agg(
-        F.count(F.lit(1)).alias("n_fetched"),
-        F.sum("n_links").alias("n_links"),
-        F.sum("n_images").alias("n_images"),
-    ).withColumn("epoch", F.lit(epoch))
+        # ---- fused cuckoo update + seen-check of the DELTA only (P10/E5)
+        seen_delta = selected.select(
+            "url_canon", "url_hash", "host_bucket",
+            F.lit(epoch).alias("seen_epoch"),
+        )
+        url_seen_all = read_url_seen(spark, root, epoch - 1).unionByName(
+            seen_delta
+        )
+        filters = fmt.read(
+            spark, [os.path.join(_snap_dir(root, epoch - 1), "filters")],
+            FILTERS_SCHEMA,
+        )
+        # cache: the single cogroup output feeds the filters snapshot, the
+        # fingerprint collect, AND both flag branches — without it the
+        # whole discovery pipeline + blob rebuild would run once per
+        # consumer
+        fused = _update_and_split(filters, seen_delta, adds, cfg).cache()
+        caches.append(fused)
+        filters_new = fused.filter(F.col("kind") == "f").select(
+            "host_bucket", "blob", "fingerprint"
+        )
+        flagged = fused.filter(F.col("kind") == "c").drop(
+            "blob", "fingerprint", "kind"
+        )
+        definitely_new = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
+        maybe = flagged.filter(F.col("maybe_seen")).drop("maybe_seen")
+        survived = maybe.join(
+            url_seen_all.select("url_canon"), "url_canon", "left_anti"
+        )
+        vetted = definitely_new.unionByName(survived).cache()
+        caches.append(vetted)
 
-    # ---- snapshot --------------------------------------------------------
-    # independent tables written as CONCURRENT Spark jobs (thread pool);
-    # the manifest below is the atomic completion marker, written only
-    # after every table commit succeeds, so resume safety is unchanged
-    d = _snap_dir(root, epoch)
-    writes = [
-        (seen_delta, "url_seen_delta"),
-        (fetch_log, "fetch_log"),
-        (robots_new, "robots_delta"),
-        (filters_new, "filters"),
-        (metrics, "metrics"),
-    ]
-    # payload tables come from the columns the fetch stage already
-    # emitted into the cached ``fetched`` frame: no second fetch or parse,
-    # and the manifest commits them atomically with the epoch
-    ok = fetched.filter(F.col("status") == 200)
-    if scraper_plan:
-        writes.append((ok.select("url_canon", "value_json"), "extractions"))
-    if emit_images:
-        from mlscraper_spark.images.ops import encode_images
-
-        writes.append((
-            encode_images(ok.select(F.explode("images").alias("im"))
-                          .select("im.*")),
-            "images",
+        # ---- delta merge: rewrite DIRTY buckets only ---------------------
+        # ONE job collects both per-bucket facts the driver needs this
+        # epoch: the dirty-bucket set (selected ∪ vetted markers,
+        # fingerprint NULL) and the manifest's filter fingerprints ('f'
+        # rows).  All inputs are cached (or derive from caches), so the
+        # union scans caches; O(buckets) rows.
+        _null_fp = F.lit(None).cast("string").alias("fingerprint")
+        bucket_info = (
+            selected.select("host_bucket", _null_fp)
+            .unionByName(vetted.select("host_bucket", _null_fp))
+            .unionByName(filters_new.select("host_bucket", "fingerprint"))
+            .distinct()
+            .collect()
+        )
+        dirty = sorted({r.host_bucket for r in bucket_info
+                        if r.fingerprint is None})
+        fingerprints = {str(r.host_bucket): r.fingerprint for r in bucket_info
+                        if r.fingerprint is not None}
+        new_refs = dict(refs)
+        for b in dirty:
+            new_refs[b] = epoch
+        if len(set(new_refs.values())) > cfg.max_ref_span:
+            # compaction: rewrite every bucket into this snapshot so the
+            # ref chain stays short and old snapshots can be expired
+            dirty = sorted(set(refs) | set(dirty))
+            new_refs = {b: epoch for b in dirty}
+        frontier_dirty = _frontier_rows(_merge_frontier_delta(
+            read_frontier(spark, root, epoch - 1, buckets=dirty),
+            vetted, selected,
         ))
-    # politeness token state — only when the bucket is non-degenerate
-    # (cap == refill keeps this table nonexistent and costs nothing)
-    cap, refill = _token_params(cfg)
-    if cap > refill:
-        sel_counts = selected.groupBy("host").agg(
-            F.count(F.lit(1)).alias("n_sel")
-        )
-        writes.append(
-            (_next_host_tokens(host_tokens, sel_counts, cfg), "host_tokens")
-        )
-    # periodic url_seen/robots compaction: fold base + all deltas (incl.
-    # this epoch's) into a fresh base so reads stay O(seen_compact_every)
-    # wide regardless of crawl age
-    compact = (epoch + 1) % cfg.seen_compact_every == 0
-    if compact:
-        writes.append((url_seen_all, "url_seen_base"))
-        writes.append((robots_all, "robots_base"))
-    seen_base = epoch if compact else _base_epoch(root, epoch - 1, "seen_base_epoch")
-    robots_base = (
-        epoch if compact else _base_epoch(root, epoch - 1, "robots_base_epoch")
-    )
-    from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(max_workers=len(writes) + 1) as pool:
-        futs = [pool.submit(_write_frontier, fmt, frontier_dirty, d,
-                            max(1, len(dirty)))]
-        futs += [
-            pool.submit(
-                lambda df, name: fmt.write(df, os.path.join(d, name)), df, name
-            )
-            for df, name in writes
+        # ---- snapshot ----------------------------------------------------
+        writes = [
+            (_frontier_layout(frontier_dirty, max(1, len(dirty))), "frontier"),
+            (seen_delta, "url_seen_delta"),
+            (fetched.select(
+                F.lit(epoch).alias("epoch"), "seq", "url_canon", "host",
+                "status", "n_links", "n_images", "page_fp",
+            ), "fetch_log"),
+            (robots_new, "robots_delta"),
+            (filters_new, "filters"),
+            # metrics (A8)
+            (fetched.groupBy("host_bucket").agg(
+                F.count(F.lit(1)).alias("n_fetched"),
+                F.sum("n_links").alias("n_links"),
+                F.sum("n_images").alias("n_images"),
+            ).withColumn("epoch", F.lit(epoch)), "metrics"),
         ]
-        for fut in futs:
-            fut.result()  # propagate failures before the manifest exists
+        # payload tables come from the columns the fetch stage already
+        # emitted into the cached ``fetched`` frame: no second fetch or
+        # parse, and the manifest commits them atomically with the epoch
+        ok = fetched.filter(F.col("status") == 200)
+        if scraper_plan:
+            writes.append((ok.select("url_canon", "value_json"), "extractions"))
+        if emit_images:
+            from mlscraper_spark.images.ops import encode_images
 
-    with open(_manifest_path(root, epoch), "w") as f:
-        json.dump(
-            {
-                "epoch": epoch,
-                "n_fetched": n_selected,
-                "filter_fingerprints": fingerprints,
-                "frontier_refs": {str(b): e for b, e in sorted(new_refs.items())},
-                "seen_base_epoch": seen_base,
-                "robots_base_epoch": robots_base,
-            },
-            f,
-        )
-    return n_selected
-
-
-def _write_empty_epoch(spark, root, epoch, refs, robots, filters,
-                       host_tokens, cfg, fmt):
-    """Nothing selected: carry every frontier bucket forward by reference
-    (zero frontier I/O) and write empty deltas so readers of this epoch
-    see complete tables.  The blob-lineage contract holds here too: this
-    is the FINAL snapshot of every completed crawl, so its manifest must
-    carry the same filter_fingerprints keys as every other epoch."""
-    d = _snap_dir(root, epoch)
-    cap, refill = _token_params(cfg)
-    if cap > refill:
-        # refill still ticks on an empty epoch (tokens accrue with time)
-        empty_counts = spark.createDataFrame([], "host string, n_sel long")
-        fmt.write(_next_host_tokens(host_tokens, empty_counts, cfg),
-                  os.path.join(d, "host_tokens"))
-    fmt.write_empty(spark, os.path.join(d, "url_seen_delta"), SEEN_SCHEMA)
-    fmt.write_empty(spark, os.path.join(d, "fetch_log"), FETCHLOG_SCHEMA)
-    fmt.write_empty(spark, os.path.join(d, "robots_delta"), ROBOTS_SCHEMA)
-    fmt.write(filters, os.path.join(d, "filters"))
-    fingerprints = _collect_fingerprints(filters)
-    with open(_manifest_path(root, epoch), "w") as f:
-        json.dump(
-            {
-                "epoch": epoch,
-                "n_fetched": 0,
-                "filter_fingerprints": fingerprints,
-                "frontier_refs": {str(b): e for b, e in sorted(refs.items())},
-                "seen_base_epoch": _base_epoch(root, epoch - 1, "seen_base_epoch"),
-                "robots_base_epoch": _base_epoch(root, epoch - 1, "robots_base_epoch"),
-            },
-            f,
-        )
+            writes.append((
+                encode_images(ok.select(F.explode("images").alias("im"))
+                              .select("im.*")),
+                "images",
+            ))
+        # politeness token state — only when the bucket is non-degenerate
+        # (cap == refill keeps this table nonexistent and costs nothing)
+        cap, refill = _token_params(cfg)
+        if cap > refill:
+            sel_counts = selected.groupBy("host").agg(
+                F.count(F.lit(1)).alias("n_sel")
+            )
+            writes.append(
+                (_next_host_tokens(host_tokens, sel_counts, cfg), "host_tokens")
+            )
+        # periodic url_seen/robots compaction: fold base + all deltas
+        # (incl. this epoch's) into a fresh base so reads stay
+        # O(seen_compact_every) wide regardless of crawl age
+        compact = (epoch + 1) % cfg.seen_compact_every == 0
+        if compact:
+            writes.append((url_seen_all, "url_seen_base"))
+            writes.append((robots.unionByName(robots_new), "robots_base"))
+        _commit_snapshot(spark, root, epoch, writes, [], {
+            "epoch": epoch,
+            "n_fetched": n_selected,
+            "filter_fingerprints": fingerprints,
+            "frontier_refs": {str(b): e for b, e in sorted(new_refs.items())},
+            "seen_base_epoch": epoch if compact else _base_epoch(
+                root, epoch - 1, "seen_base_epoch"),
+            "robots_base_epoch": epoch if compact else _base_epoch(
+                root, epoch - 1, "robots_base_epoch"),
+        })
+        return n_selected
+    finally:
+        for df_ in caches:
+            df_.unpersist()
 
 
 def run_crawl(spark: SparkSession, root: str, seeds, web: WebConfig,

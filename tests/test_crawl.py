@@ -179,8 +179,9 @@ def test_clean_buckets_carry_forward(spark, tmp_path):
     )
     assert diverged, "no epoch carried a clean bucket forward by reference"
     # lineage contract: EVERY epoch's manifest carries filter_fingerprints,
-    # including the final (empty, crawl-exhausted) one
+    # including the last one, which drained the frontier
     import json as _json
+    import os
 
     from mlscraper_spark.crawl.engine import _manifest_path
 
@@ -188,11 +189,62 @@ def test_clean_buckets_carry_forward(spark, tmp_path):
         with open(_manifest_path(root, e)) as f:
             assert "filter_fingerprints" in _json.load(f), f"epoch {e}"
     want = crawl_oracle(seeds, web, budget_per_host=2, max_epochs=10)
-    assert _fetch_log_tuples(spark, root) == [
+    assert not want.frontier, "web too large to finish within 10 epochs"
+    log = _fetch_log_tuples(spark, root)
+    assert log == [
         (r["epoch"], r["seq"], r["url_canon"]) for r in want.fetch_log
     ]
     seen = {r.url_canon for r in read_url_seen(spark, root, last).collect()}
     assert seen == want.url_seen
+    # a finished crawl ends at its last fetching epoch: the drained
+    # frontier writes no snapshot, and re-running it writes nothing
+    assert last == want.fetch_log[-1]["epoch"]
+    snaps = sorted(os.listdir(root))
+    run_crawl(spark, root, seeds, web, cfg, max_epochs=20)
+    assert sorted(os.listdir(root)) == snaps
+    assert _fetch_log_tuples(spark, root) == log
+
+
+def _jobs_submitted(spark, fn):
+    """``(fn(), Spark jobs submitted while it ran)``, counted by diffing
+    job ids in the driver status store: the snapshot writes run in a
+    thread pool, which a job group set on this thread does not reach."""
+    sc = spark.sparkContext._jsc.sc()
+    bus, store = sc.listenerBus(), sc.statusStore()
+
+    def job_ids():
+        bus.waitUntilEmpty()
+        jobs = store.jobsList(None)
+        return [jobs.apply(i).jobId() for i in range(jobs.size())]
+
+    before = max(job_ids(), default=-1)
+    out = fn()
+    return out, sum(1 for j in job_ids() if j > before)
+
+
+def test_seed_and_epoch_job_budget(spark, tmp_path):
+    """Spark jobs per call on a small web stay within budget: 10 for
+    seed_crawl (which runs the epoch's discovery stage), 31 per fetching
+    run_epoch, and 5 for the run_epoch that finds the frontier drained
+    (it fetches nothing and writes no snapshot)."""
+    from mlscraper_spark.crawl.engine import run_epoch, seed_crawl
+
+    web = WebConfig(n_hosts=2, max_pages_per_host=4)
+    cfg = CrawlConfig(budget_per_host=2, n_buckets=8)
+    root = str(tmp_path / "jobs")
+    _, n_seed = _jobs_submitted(
+        spark, lambda: seed_crawl(spark, root, web.seeds(2), web, cfg))
+    n_epoch = []
+    for e in range(10):
+        n, jobs = _jobs_submitted(
+            spark, lambda: run_epoch(spark, root, e, web, cfg))
+        n_epoch.append(jobs)
+        if n == 0:
+            break
+    assert n == 0, "crawl did not drain"
+    assert n_seed <= 10, n_seed
+    assert all(j <= 31 for j in n_epoch[:-1]), n_epoch
+    assert n_epoch[-1] <= 5, n_epoch
 
 
 def test_compaction_rewrites_and_stays_exact(spark, tmp_path):
