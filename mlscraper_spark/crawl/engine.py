@@ -94,14 +94,6 @@ class CrawlConfig:
     # but loses the fast path, so at 10^10 URLs / 4096 buckets you'd run
     # 1 << 20 (8 MiB/bucket).  Changing this across a resume is rejected
     # (the blob header carries its geometry).
-    fetch_partitions: int | None = None  # optional HARD CAP on fetch-stage
-    # task count; None (default) sizes by cores and width — 4 waves/core,
-    # ≤~50k URLs/task.  A fixed cap like the old default of 128 silently
-    # throttles a 1000-executor cluster (parallelism×4 ≫ 128), so a cap
-    # is only for callers that must bound task count (e.g. rate-limited
-    # egress).  Independent of n_buckets: politeness is enforced before
-    # the fetch, so any even partitioning is sound; url_hash keying
-    # spreads heavy hosts.
     max_ref_span: int = 8  # frontier refs may span at most this many
     # snapshots before a full compaction rewrite (bounds manifest-chain
     # length and lets old snapshots expire — Iceberg snapshot-expiry
@@ -175,6 +167,25 @@ def _frontier_refs(root: str, epoch: int) -> dict[int, int]:
     return {int(k): int(v) for k, v in m["frontier_refs"].items()}
 
 
+def _read_existing(spark: SparkSession, paths: list[str],
+                   schema) -> DataFrame:
+    """The union of the tables at ``paths`` that exist; absent ones read
+    as empty.  A committed snapshot omits every table it would have
+    written with zero rows: its manifest is the commit marker, so a table
+    missing from a committed snapshot can only mean "no rows".
+
+    With no table present the result is ``createDataFrame([]).limit(0)``:
+    an empty ``LocalRelation`` whose size estimate is 0.  A bare
+    ``createDataFrame([])`` plans as an RDD scan sized Long.MaxValue,
+    which turns a downstream broadcast join into a sort-merge join (one
+    more job in epoch 0's seen-check)."""
+    fmt = get_table_format(spark)
+    paths = [p for p in paths if fmt.exists(spark, p)]
+    if not paths:
+        return spark.createDataFrame([], schema).limit(0)
+    return fmt.read(spark, paths, schema)
+
+
 def read_frontier(spark: SparkSession, root: str, epoch: int,
                   buckets: list[int] | None = None) -> DataFrame:
     """Assemble the frontier at a snapshot from its bucket refs.
@@ -182,7 +193,8 @@ def read_frontier(spark: SparkSession, root: str, epoch: int,
     ``buckets`` restricts the read to those host_buckets (the dirty set of
     a delta merge); file-level min/max stats on host_bucket prune the scan
     because each snapshot's frontier files are written repartitioned by
-    bucket."""
+    bucket.  A referenced frontier table is read without an existence
+    probe: a missing one means a corrupt root, and the read fails."""
     fmt = get_table_format(spark)
     refs = _frontier_refs(root, epoch)
     if buckets is not None:
@@ -199,7 +211,7 @@ def read_frontier(spark: SparkSession, root: str, epoch: int,
         )
         parts.append(scan.filter(F.col("host_bucket").isin(bs)))
     if not parts:
-        return spark.createDataFrame([], FRONTIER_SCHEMA)
+        return _read_existing(spark, [], FRONTIER_SCHEMA)
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -318,16 +330,15 @@ _PATH_BAD = (
 
 
 def canonicalize_frame(df: DataFrame, raw_col: str) -> DataFrame:
-    """Append (url_canon, host, path) for ``raw_col``: JVM expressions for
-    the dominant shapes; the residue is FILTERED OUT and routed through the
-    Arrow UDF as its own (near-empty) branch of a union.  The r5 shape
-    instead masked the residue column to null and ran the UDF over EVERY
-    row — correct, but the whole link set still crossed the JVM↔python
-    boundary and back (guide §4.1: you control how many rows cross);
-    measured ~9 s/epoch of pure Arrow round-trip at the 4M-link width.
-    Row order across the union differs from the masked form; every
-    consumer is an aggregation/join/sorted-write, so results are
-    unchanged (the bit-for-bit crawl suite pins this)."""
+    """Append (url_canon, host, path) for ``raw_col`` in one masked
+    projection: JVM expressions compute all three for the rows the fast
+    gate admits; every other row goes to the exact Arrow residue UDF.
+    The UDF's input column is the raw URL masked to null on fast rows, so
+    it runs over every row but only residue rows carry data across the
+    JVM↔python boundary, and each output column picks the JVM or the UDF
+    value by the same gate.  The gate is evaluated once per row (the
+    projection's subexpression elimination shares it); row order is the
+    input's."""
     s = F.trim(F.col(raw_col))  # ASCII-space trim; other edge whitespace
     # fails the fast gate and lands in the residue (python strips it)
     base = F.substring_index(s, "#", 1)
@@ -439,23 +450,18 @@ def _frontier_layout(df: DataFrame, n_buckets: int) -> DataFrame:
 
 
 def _commit_snapshot(spark: SparkSession, root: str, epoch: int,
-                     writes: list, empties: list, manifest: dict) -> None:
+                     writes: list, manifest: dict) -> None:
     """Write the snapshot after ``epoch``: every ``(df, name)`` in
-    ``writes`` and every zero-row ``(name, schema)`` in ``empties`` as
-    concurrent seam writes, then the manifest.  The manifest is the
-    atomic completion marker: it is written only after every table write
-    has returned, so a failed write leaves no manifest and a resume redoes
-    the epoch.  Zero-row tables commit through ``write_empty`` — the
-    parquet variant does it driver-side (a zero-row Spark job costs
-    ~0.5 s of pure scheduling, measured r6)."""
+    ``writes`` as concurrent seam writes, then the manifest.  The manifest
+    is the atomic completion marker: it is written only after every table
+    write has returned, so a failed write leaves no manifest and a resume
+    redoes the epoch.  A table known to have no rows is left out of
+    ``writes``; readers take its absence as empty (``_read_existing``)."""
     fmt = get_table_format(spark)
     d = _snap_dir(root, epoch)
-    with ThreadPoolExecutor(max_workers=len(writes) + len(empties)) as pool:
+    with ThreadPoolExecutor(max_workers=len(writes)) as pool:
         futs = [pool.submit(fmt.write, df, os.path.join(d, name))
                 for df, name in writes]
-        futs += [pool.submit(fmt.write_empty, spark, os.path.join(d, name),
-                             schema)
-                 for name, schema in empties]
         for fut in futs:
             fut.result()  # propagate failures before the manifest exists
     with open(_manifest_path(root, epoch), "w") as f:
@@ -510,7 +516,9 @@ def _discover(spark: SparkSession, rows: DataFrame, epoch: int,
 
 def seed_crawl(spark: SparkSession, root: str, seeds, web: WebConfig,
                cfg: CrawlConfig, fetch_adapter=None) -> None:
-    """Write the epoch=-1 snapshot: seeded frontier, empty everything else.
+    """Write the epoch=-1 snapshot: the seeded frontier and the seed
+    hosts' robots rules.  url_seen and the filters start empty, so the
+    snapshot has no table for them (see ``_read_existing``).
     Seeds are epoch -1's discoveries at depth 0: they go through the
     epoch's discovery stage (``_discover``), robots resolved by
     ``fetch_adapter`` (the same seam as the epoch loop's fetch stage).
@@ -533,32 +541,37 @@ def seed_crawl(spark: SparkSession, root: str, seeds, web: WebConfig,
         # (pandas object column with no rows → "can not infer schema").
         raw = spark.createDataFrame(pd.DataFrame({"raw": seeds}),
                                     schema="raw string")
+    # every cache is released in the finally block, also when a write
+    # throws
     caches: list[DataFrame] = []
-    cand, robots = _discover(
-        spark, raw.select(F.lit(0).alias("depth"), "raw"), -1, None, cfg,
-        adapter, caches,
-    )
-    frontier = _frontier_rows(cand).dropDuplicates(["url_canon"]).cache()
-    caches.append(frontier)
-    bucket_rows = frontier.groupBy("host_bucket").count().collect()
-    # the manifest records the seeded FRONTIER (canonicalized, deduped,
-    # robots-filtered), so the same seeds given as a list or as a
-    # DataFrame write the same manifest; it falls out of the bucket collect
-    _commit_snapshot(
-        spark, root, -1,
-        [(_frontier_layout(frontier, cfg.n_buckets), "frontier"),
-         (robots, "robots_delta")],
-        [("url_seen_delta", SEEN_SCHEMA), ("filters", FILTERS_SCHEMA)],
-        {
-            "epoch": -1,
-            "seeds": sum(r["count"] for r in bucket_rows),
-            "frontier_refs": {
-                str(b): -1 for b in sorted(r.host_bucket for r in bucket_rows)
+    try:
+        cand, robots = _discover(
+            spark, raw.select(F.lit(0).alias("depth"), "raw"), -1, None, cfg,
+            adapter, caches,
+        )
+        frontier = _frontier_rows(cand).dropDuplicates(["url_canon"]).cache()
+        caches.append(frontier)
+        bucket_rows = frontier.groupBy("host_bucket").count().collect()
+        # the manifest records the seeded FRONTIER (canonicalized, deduped,
+        # robots-filtered), so the same seeds given as a list or as a
+        # DataFrame write the same manifest; it falls out of the bucket
+        # collect
+        _commit_snapshot(
+            spark, root, -1,
+            [(_frontier_layout(frontier, cfg.n_buckets), "frontier"),
+             (robots, "robots_delta")],
+            {
+                "epoch": -1,
+                "seeds": sum(r["count"] for r in bucket_rows),
+                "frontier_refs": {
+                    str(b): -1
+                    for b in sorted(r.host_bucket for r in bucket_rows)
+                },
             },
-        },
-    )
-    for df_ in caches:
-        df_.unpersist()
+        )
+    finally:
+        for df_ in caches:
+            df_.unpersist()
 
 
 def _robots_rules_df(spark: SparkSession, hosts_df: DataFrame, epoch: int,
@@ -1081,19 +1094,15 @@ def _read_base_plus_deltas(spark: SparkSession, root: str, upto_epoch: int,
     ``{table}_base`` (if any) plus the ``{table}_delta`` dirs after it —
     the Iceberg base+delta shape; periodic compaction bounds the union
     width at seen_compact_every regardless of crawl age."""
-    fmt = get_table_format(spark)
     base = _base_epoch(root, upto_epoch, base_key)
     paths = []
     start = -1
     if base is not None:
         paths.append(os.path.join(_snap_dir(root, base), f"{table}_base"))
         start = base + 1
-    paths += [
-        p
-        for e in range(start, upto_epoch + 1)
-        if fmt.exists(spark, p := os.path.join(_snap_dir(root, e), f"{table}_delta"))
-    ]
-    return fmt.read(spark, paths, schema)
+    paths += [os.path.join(_snap_dir(root, e), f"{table}_delta")
+              for e in range(start, upto_epoch + 1)]
+    return _read_existing(spark, paths, schema)
 
 
 def read_url_seen(spark: SparkSession, root: str, upto_epoch: int) -> DataFrame:
@@ -1105,11 +1114,10 @@ def read_url_seen(spark: SparkSession, root: str, upto_epoch: int) -> DataFrame:
 def read_host_tokens(spark: SparkSession, root: str, epoch: int) -> DataFrame:
     """Politeness token state after an epoch; absent table = every host
     at full capacity (the default-config path never writes one)."""
-    fmt = get_table_format(spark)
-    p = os.path.join(_snap_dir(root, epoch), "host_tokens")
-    if not fmt.exists(spark, p):
-        return spark.createDataFrame([], HOST_TOKENS_SCHEMA)
-    return fmt.read(spark, [p], HOST_TOKENS_SCHEMA)
+    return _read_existing(
+        spark, [os.path.join(_snap_dir(root, epoch), "host_tokens")],
+        HOST_TOKENS_SCHEMA,
+    )
 
 
 def _next_host_tokens(host_tokens: DataFrame, sel_counts: DataFrame,
@@ -1152,7 +1160,6 @@ def run_epoch(spark: SparkSession, root: str, epoch: int, web: WebConfig,
     refills — every host with a frontier row has at least one token).
     ``scraper_plan``/``emit_images`` add the epoch's payload tables (see
     ``run_crawl``)."""
-    fmt = get_table_format(spark)
     adapter = fetch_adapter or SynthWebAdapter(web)
     refs = _frontier_refs(root, epoch - 1)
     host_tokens = read_host_tokens(spark, root, epoch - 1)
@@ -1191,8 +1198,6 @@ def run_epoch(spark: SparkSession, root: str, epoch: int, web: WebConfig,
         # granularity.
         n_fetch = max(spark.sparkContext.defaultParallelism,
                       n_selected // 50_000 + 1)
-        if cfg.fetch_partitions is not None:
-            n_fetch = min(cfg.fetch_partitions, n_fetch)
         fetched = (
             selected.select("url_canon", "url_hash", "host", "host_bucket",
                             "seq", "depth")
@@ -1223,7 +1228,7 @@ def run_epoch(spark: SparkSession, root: str, epoch: int, web: WebConfig,
         url_seen_all = read_url_seen(spark, root, epoch - 1).unionByName(
             seen_delta
         )
-        filters = fmt.read(
+        filters = _read_existing(
             spark, [os.path.join(_snap_dir(root, epoch - 1), "filters")],
             FILTERS_SCHEMA,
         )
@@ -1326,7 +1331,7 @@ def run_epoch(spark: SparkSession, root: str, epoch: int, web: WebConfig,
         if compact:
             writes.append((url_seen_all, "url_seen_base"))
             writes.append((robots.unionByName(robots_new), "robots_base"))
-        _commit_snapshot(spark, root, epoch, writes, [], {
+        _commit_snapshot(spark, root, epoch, writes, {
             "epoch": epoch,
             "n_fetched": n_selected,
             "filter_fingerprints": fingerprints,
@@ -1385,16 +1390,11 @@ EXTRACTIONS_SCHEMA = "url_canon string, value_json string"
 
 def _read_epoch_tables(spark: SparkSession, root: str, name: str,
                        schema: object) -> DataFrame:
-    fmt = get_table_format(spark)
     last = last_complete_epoch(root)
-    paths = [
-        p
+    return _read_existing(spark, [
+        os.path.join(_snap_dir(root, e), name)
         for e in range(0, (last if last is not None else -1) + 1)
-        if fmt.exists(spark, p := os.path.join(_snap_dir(root, e), name))
-    ]
-    if not paths:  # nothing written yet → empty frame, not AnalysisException
-        return spark.createDataFrame([], schema)
-    return fmt.read(spark, paths, schema)
+    ], schema)
 
 
 def read_images(spark: SparkSession, root: str) -> DataFrame:

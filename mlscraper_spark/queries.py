@@ -1378,7 +1378,9 @@ def q24_match_scan(spark, sf_dir):
         F.col("text"),
         F.lit("</div></body></html>"),
     )
-    pages = _spread(spark, docs.filter(F.col("doc_id") % 10 == 0)).select(
+    # no _spread: the scan is one split, and a round-robin repartition
+    # adds a job and a stage ahead of the parse for ~500 tiny pages
+    pages = docs.filter(F.col("doc_id") % 10 == 0).select(
         F.col("doc_id").cast("string").alias("page_id"),
         F.encode(html, "utf-8").alias("html"),
     )

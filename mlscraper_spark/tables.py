@@ -29,16 +29,6 @@ class TableFormat:
     def write(self, df: DataFrame, path: str, mode: str = "overwrite") -> None:
         raise NotImplementedError
 
-    def write_empty(self, spark: SparkSession, path: str, schema: str) -> None:
-        """Commit an empty table (schema only, zero rows).  Default: an
-        ordinary empty-DataFrame write through ``write`` — correct for
-        any format.  Formats may override when they can commit the empty
-        table cheaper (the parquet variant writes it driver-side: a
-        zero-row Spark WRITE still schedules a task and pays a full
-        job round trip — measured ~0.5 s each, and a crawl snapshot
-        carries several)."""
-        self.write(spark.createDataFrame([], schema), path)
-
     def read(self, spark: SparkSession, paths: list[str], schema=None) -> DataFrame:
         raise NotImplementedError
 
@@ -66,40 +56,6 @@ class TableFormat:
 class ParquetSnapshotFormat(TableFormat):
     def write(self, df: DataFrame, path: str, mode: str = "overwrite") -> None:
         df.write.mode(mode).parquet(path)
-
-    def write_empty(self, spark: SparkSession, path: str, schema: str) -> None:
-        # Driver-side commit of a zero-row table: one empty parquet part
-        # (same on-disk shape a zero-row Spark write produces — readable
-        # with or without a caller schema) plus the _SUCCESS marker, no
-        # Spark job at all.  The arrow schema comes from the same
-        # DDL→StructType→arrow mapping Spark's own Arrow path uses, so
-        # reader schemas agree with seam-written non-empty deltas.
-        import os
-        import shutil
-        from urllib.parse import urlsplit
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_schema
-        from pyspark.sql.types import _parse_datatype_string
-
-        if urlsplit(path).scheme:
-            # file:, hdfs://, s3a://... are not local paths the os calls
-            # below can write: commit through the base class's Spark write
-            return super().write_empty(spark, path, schema)
-        aschema = to_arrow_schema(_parse_datatype_string(schema))
-        if os.path.isdir(path):
-            shutil.rmtree(path)  # overwrite semantics, as the job path
-        os.makedirs(path, exist_ok=True)
-        table = pa.Table.from_arrays(
-            [pa.array([], type=f.type) for f in aschema], schema=aschema
-        )
-        pq.write_table(
-            table, os.path.join(path, "part-00000-empty.snappy.parquet"),
-            compression="snappy",
-        )
-        with open(os.path.join(path, "_SUCCESS"), "w"):
-            pass
 
     def read(self, spark: SparkSession, paths: list[str], schema=None) -> DataFrame:
         reader = spark.read

@@ -225,8 +225,10 @@ def _jobs_submitted(spark, fn):
 def test_seed_and_epoch_job_budget(spark, tmp_path):
     """Spark jobs per call on a small web stay within budget: 10 for
     seed_crawl (which runs the epoch's discovery stage), 31 per fetching
-    run_epoch, and 5 for the run_epoch that finds the frontier drained
-    (it fetches nothing and writes no snapshot)."""
+    run_epoch and 30 for epoch 0 (its absent url_seen and filters read as
+    a zero-size relation, so the seen-check join stays a broadcast), and
+    5 for the run_epoch that finds the frontier drained (it fetches
+    nothing and writes no snapshot)."""
     from mlscraper_spark.crawl.engine import run_epoch, seed_crawl
 
     web = WebConfig(n_hosts=2, max_pages_per_host=4)
@@ -243,8 +245,105 @@ def test_seed_and_epoch_job_budget(spark, tmp_path):
             break
     assert n == 0, "crawl did not drain"
     assert n_seed <= 10, n_seed
+    assert n_epoch[0] <= 30, n_epoch
     assert all(j <= 31 for j in n_epoch[:-1]), n_epoch
     assert n_epoch[-1] <= 5, n_epoch
+
+
+def test_seed_snapshot_holds_no_empty_tables(spark, tmp_path):
+    """The seed snapshot commits only the tables that have rows: the
+    frontier and the seed hosts' robots rules.  The tables it omits read
+    as empty, with their schemas' columns.  A root whose seed snapshot
+    also holds zero-row url_seen and filters tables (the layout older
+    versions wrote) reads the same and resumes to the oracle's crawl."""
+    import os
+
+    from mlscraper_spark.crawl.engine import (
+        FILTERS_SCHEMA,
+        HOST_TOKENS_SCHEMA,
+        SEEN_SCHEMA,
+        _snap_dir,
+        read_host_tokens,
+        seed_crawl,
+    )
+
+    web = WebConfig(n_hosts=2, max_pages_per_host=4)
+    seeds = web.seeds(2)
+    cfg = CrawlConfig(budget_per_host=2, n_buckets=8)
+    root = str(tmp_path / "seed")
+    seed_crawl(spark, root, seeds, web, cfg)
+    snap = _snap_dir(root, -1)
+    assert sorted(os.listdir(snap)) == [
+        "_manifest.json", "frontier", "robots_delta"]
+
+    def columns(schema):
+        return spark.createDataFrame([], schema).columns
+
+    def assert_empty():
+        for df, schema in ((read_url_seen(spark, root, -1), SEEN_SCHEMA),
+                           (read_host_tokens(spark, root, -1),
+                            HOST_TOKENS_SCHEMA)):
+            assert df.columns == columns(schema)
+            assert df.count() == 0
+
+    assert_empty()
+    for name, schema in (("url_seen_delta", SEEN_SCHEMA),
+                         ("filters", FILTERS_SCHEMA)):
+        spark.createDataFrame([], schema).write.parquet(
+            os.path.join(snap, name))
+    assert_empty()
+    run_crawl(spark, root, seeds, web, cfg, max_epochs=2)
+    want = crawl_oracle(seeds, web, budget_per_host=2, max_epochs=2)
+    assert _fetch_log_tuples(spark, root) == [
+        (r["epoch"], r["seq"], r["url_canon"]) for r in want.fetch_log
+    ]
+    seen = read_url_seen(spark, root, last_complete_epoch(root)).collect()
+    assert {r.url_canon for r in seen} == want.url_seen
+
+
+@pytest.mark.parametrize("table,epoch", [("robots_delta", -1),
+                                         ("filters", 1)])
+def test_failed_snapshot_write_leaves_no_manifest(spark, tmp_path, table,
+                                                  epoch):
+    """A seam write that throws inside the snapshot's write pool fails the
+    crawl, leaves the snapshot without a manifest and releases the call's
+    caches; a rerun with a working format resumes from the last committed
+    snapshot and equals the oracle."""
+    import os
+
+    from mlscraper_spark.crawl.engine import _manifest_path, _snap_dir
+    from mlscraper_spark.tables import ParquetSnapshotFormat, use_table_format
+
+    web = WebConfig(n_hosts=4, max_pages_per_host=6)
+    seeds = web.seeds(4)
+    cfg = CrawlConfig(budget_per_host=2, n_buckets=8)
+    root = str(tmp_path / "fail")
+    target = os.path.join(_snap_dir(root, epoch), table)
+
+    class FailingFormat(ParquetSnapshotFormat):
+        def write(self, df, path, mode="overwrite"):
+            if path == target:
+                raise RuntimeError(f"injected write failure: {path}")
+            super().write(df, path, mode)
+
+    def persistent_rdds():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    before = persistent_rdds()
+    with use_table_format(FailingFormat()):
+        with pytest.raises(RuntimeError, match="injected write failure"):
+            run_crawl(spark, root, seeds, web, cfg, max_epochs=3)
+    assert persistent_rdds() == before
+    assert not os.path.exists(_manifest_path(root, epoch))
+    assert last_complete_epoch(root) == (None if epoch == -1 else epoch - 1)
+
+    run_crawl(spark, root, seeds, web, cfg, max_epochs=3)
+    want = crawl_oracle(seeds, web, budget_per_host=2, max_epochs=3)
+    assert _fetch_log_tuples(spark, root) == [
+        (r["epoch"], r["seq"], r["url_canon"]) for r in want.fetch_log
+    ]
+    seen = read_url_seen(spark, root, last_complete_epoch(root)).collect()
+    assert {r.url_canon for r in seen} == want.url_seen
 
 
 def test_compaction_rewrites_and_stays_exact(spark, tmp_path):
@@ -648,61 +747,14 @@ def test_delta_merge_single_exchange_no_join(spark):
     assert rows["http://h9.test/new"].depth == 3
 
 
-def test_write_empty_matches_job_write(spark, tmp_path):
-    """The parquet write_empty fast path (r6: driver-side commit, no Spark
-    job) must be indistinguishable to readers from a zero-row Spark write:
-    same read-back rows (none), same column set with and without a caller
-    schema, and the _SUCCESS commit marker present."""
-    import os
-
-    from mlscraper_spark.crawl.engine import FETCHLOG_SCHEMA
-    from mlscraper_spark.tables import ParquetSnapshotFormat
-
-    fmt = ParquetSnapshotFormat()
-    fast = str(tmp_path / "fast")
-    job = str(tmp_path / "job")
-    fmt.write_empty(spark, fast, FETCHLOG_SCHEMA)
-    fmt.write(spark.createDataFrame([], FETCHLOG_SCHEMA), job)
-    for p in (fast, job):
-        assert os.path.isfile(os.path.join(p, "_SUCCESS"))
-    a = fmt.read(spark, [fast], FETCHLOG_SCHEMA)
-    b = fmt.read(spark, [job], FETCHLOG_SCHEMA)
-    assert a.columns == b.columns and a.count() == 0 == b.count()
-    # schema-less read must infer the same fields, types included, from
-    # the empty part
-    assert spark.read.parquet(fast).schema == b.schema
-    # overwrite semantics: a second write_empty replaces the dir
-    fmt.write_empty(spark, fast, FETCHLOG_SCHEMA)
-    assert os.path.isfile(os.path.join(fast, "_SUCCESS"))
-
-
-def test_write_empty_uri_path_uses_spark_write(spark, tmp_path):
-    """A path with a URI scheme is not a local path: write_empty must
-    commit it through Spark's write, not the driver-side os calls (which
-    would create a literal 'file:' directory and leave the target
-    missing)."""
-    import os
-
-    from mlscraper_spark.crawl.engine import FETCHLOG_SCHEMA
-    from mlscraper_spark.tables import ParquetSnapshotFormat
-
-    target = tmp_path / "uri"
-    fmt = ParquetSnapshotFormat()
-    fmt.write_empty(spark, f"file://{target}", FETCHLOG_SCHEMA)
-    assert os.path.isfile(os.path.join(target, "_SUCCESS"))
-    back = fmt.read(spark, [f"file://{target}"], FETCHLOG_SCHEMA)
-    assert back.count() == 0 and back.columns == [
-        f.name for f in spark.createDataFrame([], FETCHLOG_SCHEMA).schema
-    ]
-
-
 def test_table_format_seam_contract(spark, tmp_path, oracle_state):
     """Inject a counting TableFormat through run_crawl and prove the epoch
     loop touches table storage ONLY via the seam: every parquet dir that
     exists on disk afterwards was written through the injected format, all
-    reads went through it too, and the crawl result is unchanged.  The
-    JSON epoch manifest is the engine's own commit marker — an engine
-    concept, not table storage — and is exactly the non-parquet residue."""
+    reads and existence probes went through it too (every probe inside
+    the crawl root), and the crawl result is unchanged.  The JSON epoch
+    manifest is the engine's own commit marker — an engine concept, not
+    table storage — and is exactly the non-parquet residue."""
     import os
 
     from mlscraper_spark.tables import ParquetSnapshotFormat, use_table_format
@@ -711,19 +763,19 @@ def test_table_format_seam_contract(spark, tmp_path, oracle_state):
         def __init__(self):
             self.writes: list[str] = []
             self.reads: list[str] = []
+            self.probes: list[str] = []
 
         def write(self, df, path, mode="overwrite"):
             self.writes.append(path)
             super().write(df, path, mode)
 
-        def write_empty(self, spark_, path, schema):
-            # part of the seam: zero-row commits count as writes too
-            self.writes.append(path)
-            super().write_empty(spark_, path, schema)
-
         def read(self, spark_, paths, schema=None):
             self.reads.extend(paths)
             return super().read(spark_, paths, schema)
+
+        def exists(self, spark_, path):
+            self.probes.append(path)
+            return super().exists(spark_, path)
 
     root = str(tmp_path / "seam")
     fake = CountingFormat()
@@ -737,7 +789,9 @@ def test_table_format_seam_contract(spark, tmp_path, oracle_state):
         ]
     assert got == [(r["epoch"], r["seq"], r["url_canon"])
                    for r in oracle_state.fetch_log]
-    assert fake.writes and fake.reads
+    assert fake.writes and fake.reads and fake.probes
+    assert all(os.path.commonpath([root, p]) == root for p in fake.probes), (
+        fake.probes)
     # every on-disk table dir under the root was written via the seam;
     # the only files not inside a seam-written dir are the manifests
     written = {os.path.normpath(p) for p in fake.writes}
