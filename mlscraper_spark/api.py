@@ -21,10 +21,9 @@ def train_scraper(pages_and_values: list[tuple[bytes | str, object]],
 
     With ``spark`` given, the raw match scan (the only stage that touches
     full page contents) runs as a distributed job over the exploded nodes
-    table (SURVEY.md §3.1), and selector-uniqueness verification fans out
-    as a Spark job for large candidate sets (J6); the combination search
-    stays on the driver over the pruned match sets, exactly as the
-    reference's loop (training.py:62-77).
+    table (SURVEY.md §3.1).  Selector-uniqueness verification (J6) and the
+    combination search stay on the driver over the pruned match sets,
+    exactly as the reference's loop (training.py:62-77).
     """
     sample_pages = [
         SamplePage(f"sample-{i}", html) for i, (html, _) in enumerate(pages_and_values)
@@ -46,8 +45,7 @@ def train_scraper(pages_and_values: list[tuple[bytes | str, object]],
              for p, hv in zip(sample_pages, pages_and_values)],
             values,
         )
-    return _train_local(ts, complexity=complexity, value_match_index=index,
-                        spark=spark)
+    return _train_local(ts, complexity=complexity, value_match_index=index)
 
 
 def scrape(pages_df: DataFrame, plan: dict) -> DataFrame:

@@ -114,6 +114,17 @@ class CrawlConfig:
     # whole history (10^4-epoch crawls would otherwise pay a
     # linearly-growing listing + tiny-file scan every epoch)
 
+    def __post_init__(self):
+        # checked at construction, before seeding writes anything: a bad
+        # value would otherwise surface mid-epoch, after fetching
+        if self.budget_per_host < 1:
+            raise ValueError("budget_per_host must be >= 1")
+        if (self.tokens_capacity is not None
+                and self.tokens_capacity < self.budget_per_host):
+            raise ValueError("tokens_capacity must be >= budget_per_host")
+        if self.filter_buckets < 1 or self.filter_buckets & (self.filter_buckets - 1):
+            raise ValueError("filter_buckets must be a power of two")
+
 
 def _snap_dir(root: str, epoch: int) -> str:
     # snapshot AFTER epoch e; e = -1 is the seeded initial state
@@ -587,8 +598,7 @@ def _robots_rules_df(spark: SparkSession, hosts_df: DataFrame, epoch: int,
     adapter is pickled into python workers, one robots resolution per NEW
     host per crawl (callers pass only never-seen-before hosts)."""
     hosts = hosts_df.select("host").distinct()
-    # getattr: duck-typed test fakes need not implement the optional method
-    col = getattr(adapter, "robots_col", lambda c: None)(F.col("host"))
+    col = adapter.robots_col(F.col("host"))
     if col is not None:
         return hosts.select(
             "host", col.alias("rules_json"),
@@ -610,8 +620,7 @@ def _robots_rules_df(spark: SparkSession, hosts_df: DataFrame, epoch: int,
     return hosts.mapInPandas(_rules, ROBOTS_SCHEMA)
 
 
-def _filter_robots(df: DataFrame, robots: DataFrame,
-                   adapter=None) -> DataFrame:
+def _filter_robots(df: DataFrame, robots: DataFrame, adapter) -> DataFrame:
     """Drop rows ``fetchers.robots_blocked`` blocks: RFC 9309 longest-match
     over ``+``-encoded Allow / plain Disallow prefixes (J8).
 
@@ -620,29 +629,15 @@ def _filter_robots(df: DataFrame, robots: DataFrame,
     is a single codegen predicate — no join, no broadcast build, nothing
     serial on the driver.  Otherwise a broadcast join against the resolved
     rules table; pure-function rules make the two identical because every
-    table row was itself produced by the adapter."""
-    # Reuse the ``path`` column canonicalize_frame already computed when
-    # the caller kept it (pinned equal to urlsplit().path by
-    # tests/test_urlnorm.py): parse_url is a full java.net.URI parse per
-    # row, and re-deriving what the canonicalizer just produced was pure
-    # waste on the discovery hot path (guide §1.2: don't compute things
-    # twice).  The parse_url fallback remains for frames without it.
-    # coalesce: parse_url yields NULL for URLs java.net.URI rejects; the
-    # oracle's urlsplit returns '' there — NULL would nullify exists() and
-    # silently drop the row, diverging from the oracle
-    if "path" in df.columns:
-        path_expr = F.coalesce(F.col("path"), F.lit(""))
-    else:
-        path_expr = F.coalesce(
-            F.parse_url(F.col("url_canon"), F.lit("PATH")), F.lit("")
-        )
-    blocked_col = (
-        getattr(adapter, "robots_blocked_col", lambda h, p: None)(
-            F.col("host"), path_expr
-        )
-        if adapter is not None
-        else None
-    )
+    table row was itself produced by the adapter.
+
+    ``df`` carries the ``path`` column canonicalize_frame computed (pinned
+    equal to urlsplit().path by tests/test_urlnorm.py), so no per-row URL
+    parse is repeated here."""
+    # coalesce: a NULL path would nullify exists() and silently drop the
+    # row; the oracle's urlsplit returns '' there
+    path_expr = F.coalesce(F.col("path"), F.lit(""))
+    blocked_col = adapter.robots_blocked_col(F.col("host"), path_expr)
     if blocked_col is not None:
         return df.filter(~blocked_col)
     with_path = df.withColumn("path", path_expr)
@@ -723,9 +718,7 @@ def _partition_topk(batches: Iterator[pd.DataFrame], budget: int) -> pd.DataFram
 
 def _token_params(cfg: CrawlConfig) -> tuple[int, int]:
     cap = cfg.tokens_capacity if cfg.tokens_capacity is not None else cfg.budget_per_host
-    refill = cfg.budget_per_host
-    assert cap >= refill >= 1, "tokens_capacity must be >= budget_per_host >= 1"
-    return cap, refill
+    return cap, cfg.budget_per_host
 
 
 def _avail_col(tokens_col, cap: int, refill: int):

@@ -176,14 +176,11 @@ def redirect_of(url_canon: str, cfg: WebConfig) -> str | None:
 # frontier-path link/image scanner: compiled byte-regexes instead of a
 # full DOM parse — the standard crawler fast path (the payload extractors
 # in images/ops.py keep the full parser; only frontier discovery uses
-# this).  Scans double-quoted hrefs (the form the synthetic web emits and
-# the overwhelmingly dominant real-web form) and entity-unescapes each
-# captured value, so on the crawl corpus it returns EXACTLY what the
-# parse-based extract_links returns — pinned by
+# this).  Scans double-quoted hrefs only (``fetch`` always emits
+# href="..."), decoding utf-8-with-replace and entity-unescaping each
+# captured value, so on the crawl corpus it returns EXACTLY what the DOM
+# parser's fetchers.parse_links_and_images returns — pinned by
 # tests/test_crawl.py::test_link_scanner_matches_parser.
-# Matches double-quoted hrefs only, decoding utf-8-with-replace: correct
-# for synthweb-generated HTML (make_page always emits href="..."), and
-# pinned equal to the full DOM parser by test_link_scanner_matches_parser.
 # response_meta's callers (engine fetch UDF + sequential oracle) only ever
 # feed it synthweb pages; HTML from any other producer must go through the
 # DOM parser instead — single-quoted/unquoted hrefs would be silently
@@ -253,19 +250,6 @@ def fetch(url_canon: str, cfg: WebConfig) -> tuple[int, bytes]:
         "</body></html>"
     )
     return 200, html.encode()
-
-
-def extract_links(html: bytes) -> list[str]:
-    """Document-order hrefs — shared by oracle and engine so link
-    extraction itself is one code path (the equivalence test then isolates
-    the distributed coordination)."""
-    from mlscraper_spark.dom.parser import parse_html
-
-    return [
-        r.attrs["href"]
-        for r in parse_html(html)
-        if r.tag == "a" and "href" in r.attrs
-    ]
 
 
 def _dim(value) -> int:

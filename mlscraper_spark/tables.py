@@ -26,7 +26,7 @@ class TableFormat:
     drop in without touching the loop.  Whether a snapshot's tables
     committed is the engine's epoch manifest's job, not the format's."""
 
-    def write(self, df: DataFrame, path: str, mode: str = "overwrite") -> None:
+    def write(self, df: DataFrame, path: str) -> None:
         raise NotImplementedError
 
     def read(self, spark: SparkSession, paths: list[str], schema=None) -> DataFrame:
@@ -54,8 +54,8 @@ class TableFormat:
 
 
 class ParquetSnapshotFormat(TableFormat):
-    def write(self, df: DataFrame, path: str, mode: str = "overwrite") -> None:
-        df.write.mode(mode).parquet(path)
+    def write(self, df: DataFrame, path: str) -> None:
+        df.write.mode("overwrite").parquet(path)
 
     def read(self, spark: SparkSession, paths: list[str], schema=None) -> DataFrame:
         reader = spark.read
@@ -86,8 +86,8 @@ class IcebergSnapshotFormat(TableFormat):
     below finds the runtime.  ``read`` ignores the schema argument by
     design: an Iceberg table carries its own (evolvable) schema."""
 
-    def write(self, df: DataFrame, path: str, mode: str = "overwrite") -> None:
-        df.write.format("iceberg").mode(mode).save(path)
+    def write(self, df: DataFrame, path: str) -> None:
+        df.write.format("iceberg").mode("overwrite").save(path)
 
     def read(self, spark: SparkSession, paths: list[str], schema=None) -> DataFrame:
         dfs = [spark.read.format("iceberg").load(p) for p in paths]

@@ -6,15 +6,8 @@ ancestor paths × combinators, ``selectors.py:159-223``); uniqueness
 verification is the ordered select-compare with the limit+1 trick
 (``selectors.py:59-70``).
 
-Verification has two interchangeable executions with identical results:
-inline on the driver (reference-sized inputs; lazy, stops at the first
-passing rule) and ``generate_unique_selectors_for_nodes`` with a
-``spark`` session (the fan-out: candidate rules become a DataFrame, page
-node-records are broadcast, every rule is verified in parallel via
-mapInPandas, and the winner is the (len, lex)-first passing rule — the
-same rule the inline path yields first).  ``train_scraper(...,
-spark=...)`` switches to the fan-out when the candidate set exceeds
-``SPARK_VERIFY_THRESHOLD``.
+Verification runs inline on the driver: it is lazy and stops at the first
+passing rule, which is the (len, lex)-first one.
 """
 from __future__ import annotations
 
@@ -151,9 +144,19 @@ def uniquely_selects(dom: PageDOM, rule: str, root_id: int,
     return hits == list(node_ids)
 
 
-def _candidates_and_groups(targets, roots, complexity, indexes):
-    """Shared front half of both verification executions: the (len, lex)-
-    sorted candidate intersection and the per-root node groups."""
+def generate_unique_selectors_for_nodes(
+    targets: list[tuple[str, PageDOM, int]],
+    roots: list[tuple[str, int]] | None,
+    complexity: int,
+    indexes: dict[str, _PageSelectorIndex] | None = None,
+):
+    """selectors.py:78-98 — yields css rule strings that uniquely select the
+    given nodes under the given roots.
+
+    ``targets`` are (page_key, dom, node_id); ``roots`` are (page_key,
+    root_id) parallel to targets, or None for whole pages
+    (selectors.py:84-86).
+    """
     if roots is None:
         roots = [(pk, PAGE_ROOT) for pk, _, _ in targets]
     doms = {pk: dom for pk, dom, _ in targets}
@@ -180,88 +183,9 @@ def _candidates_and_groups(targets, roots, complexity, indexes):
     # rules in (length, lexicographic) order — the reference sorts by
     # length only (selectors.py:121-125) and leaves ties to set order; we
     # pin the tie for determinism under partitioning (SURVEY.md §7)
-    return doms, sorted(common, key=lambda s: (len(s), s)), root_groups
-
-
-SPARK_VERIFY_THRESHOLD = 512  # candidates below this verify inline (lazy
-# first-hit beats a job's scheduling latency); above it the fan-out wins
-
-
-def generate_unique_selectors_for_nodes(
-    targets: list[tuple[str, PageDOM, int]],
-    roots: list[tuple[str, int]] | None,
-    complexity: int,
-    indexes: dict[str, _PageSelectorIndex] | None = None,
-    spark=None,
-    spark_threshold: int | None = None,
-):
-    """selectors.py:78-98 — yields css rule strings that uniquely select the
-    given nodes under the given roots.
-
-    ``targets`` are (page_key, dom, node_id); ``roots`` are (page_key,
-    root_id) parallel to targets, or None for whole pages
-    (selectors.py:84-86).  With a ``spark`` session and a candidate set of
-    at least ``spark_threshold`` rules, verification fans out as a Spark
-    job (J6 at scale); the yielded rule sequence is identical either way.
-    """
-    doms, ordered, root_groups = _candidates_and_groups(
-        targets, roots, complexity, indexes
-    )
-    threshold = SPARK_VERIFY_THRESHOLD if spark_threshold is None else spark_threshold
-    if spark is not None and len(ordered) >= threshold:
-        yield from _verify_unique_selectors_spark(spark, doms, ordered, root_groups)
-        return
-    for rule in ordered:
+    for rule in sorted(common, key=lambda s: (len(s), s)):
         if all(
             uniquely_selects(doms[rpk], rule, rid, nids)
             for (rpk, rid), nids in root_groups.items()
         ):
-            yield rule
-
-
-def _verify_unique_selectors_spark(spark, doms, ordered, root_groups):
-    """J6 fan-out: verify every candidate rule in parallel.
-
-    Page node-records (plain dataclass rows — the page's relational form)
-    are broadcast once; each partition rebuilds its PageDOMs and runs the
-    same ordered select-compare (limit n+1 trick) the inline path runs.
-    The trade is explicit: the inline generator is lazy (stops at the
-    first hit), the fan-out verifies all candidates in one job — at large
-    candidate counts the parallelism dominates the wasted tail.  Passing
-    rules come back ordered (len, lex), so downstream ``next(...)``
-    behavior is unchanged."""
-    records = {pk: dom.records for pk, dom in doms.items()}
-    groups = [
-        (rpk, rid, tuple(nids)) for (rpk, rid), nids in root_groups.items()
-    ]
-    bc = spark.sparkContext.broadcast((records, groups))
-
-    def _verify(batches):
-        import pandas as pd
-
-        recs, grps = bc.value
-        local_doms = {pk: PageDOM(r) for pk, r in recs.items()}
-        for pdf in batches:
-            ok = [
-                all(
-                    uniquely_selects(local_doms[rpk], rule, rid, list(nids))
-                    for rpk, rid, nids in grps
-                )
-                for rule in pdf["rule"]
-            ]
-            yield pd.DataFrame({"rule": pdf["rule"], "ok": ok})
-
-    n_parts = max(2, spark.sparkContext.defaultParallelism)
-    rules_df = spark.createDataFrame(
-        [(r,) for r in ordered], "rule string"
-    ).repartition(n_parts)
-    passing = {
-        r.rule
-        for r in rules_df.mapInPandas(_verify, "rule string, ok boolean")
-        .filter("ok")
-        .collect()
-    }
-    bc.unpersist()
-    for rule in ordered:
-        if rule in passing:
             yield rule

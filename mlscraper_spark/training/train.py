@@ -52,14 +52,8 @@ def get_match_combination_priority(matches) -> float:
 
 
 def train_scraper(training_set: TrainingSet, complexity: int = 100,
-                  value_match_index: dict | None = None,
-                  spark=None, spark_verify_threshold: int | None = None) -> dict:
-    """training.py:36-78 — returns a scraper *plan* (scrapers.py grammar).
-
-    With ``spark`` given, the selector-uniqueness verification (J6) fans
-    out as a Spark job whenever a candidate set exceeds
-    ``spark_verify_threshold`` (default selectors.SPARK_VERIFY_THRESHOLD);
-    the resulting plan is identical to the inline path's."""
+                  value_match_index: dict | None = None) -> dict:
+    """training.py:36-78 — returns a scraper *plan* (scrapers.py grammar)."""
     samples = training_set.item.samples
     sample_matches = [
         sorted(s.get_matches(value_match_index), key=lambda m: m.span)[
@@ -80,17 +74,13 @@ def train_scraper(training_set: TrainingSet, complexity: int = 100,
     for match_combination in match_combinations:
         try:
             return train_scraper_for_matches(
-                list(match_combination), roots, doms, complexity, indexes,
-                spark=spark, spark_verify_threshold=spark_verify_threshold,
-            )
+                list(match_combination), roots, doms, complexity, indexes)
         except NoScraperFoundException as e:
             last_err = e
     raise NoScraperFoundException("did not find scraper") from last_err
 
 
-def train_scraper_for_matches(matches, roots, doms, complexity, indexes,
-                              spark=None,
-                              spark_verify_threshold: int | None = None) -> dict:
+def train_scraper_for_matches(matches, roots, doms, complexity, indexes) -> dict:
     """training.py:81-209.
 
     ``matches``: Match objects (one per root); ``roots``: (page_key, node_id)
@@ -121,10 +111,7 @@ def train_scraper_for_matches(matches, roots, doms, complexity, indexes,
 
         targets = [(m.page_key, doms[m.page_key], m.node_id) for m in matches]
         rule = next(
-            generate_unique_selectors_for_nodes(
-                targets, roots, complexity, indexes,
-                spark=spark, spark_threshold=spark_verify_threshold,
-            ),
+            generate_unique_selectors_for_nodes(targets, roots, complexity, indexes),
             None,
         )
         if rule is None:
@@ -142,9 +129,7 @@ def train_scraper_for_matches(matches, roots, doms, complexity, indexes,
                 raise NoScraperFoundException(f"missing key {k!r} in a match") from e
             try:
                 children[k] = train_scraper_for_matches(
-                    matches_per_key, roots, doms, complexity, indexes,
-                    spark=spark, spark_verify_threshold=spark_verify_threshold,
-                )
+                    matches_per_key, roots, doms, complexity, indexes)
             except NoScraperFoundException as e:
                 raise NoScraperFoundException(f"DictScraper failed ({k=})") from e
         return dict_plan(children)
@@ -160,9 +145,7 @@ def train_scraper_for_matches(matches, roots, doms, complexity, indexes,
         item_outer_roots = [r for _, r in item_match_and_roots]
         rule = next(
             generate_unique_selectors_for_nodes(
-                item_targets, item_outer_roots, complexity, indexes,
-                spark=spark, spark_threshold=spark_verify_threshold,
-            ),
+                item_targets, item_outer_roots, complexity, indexes),
             None,
         )
         if rule is None:
@@ -172,9 +155,7 @@ def train_scraper_for_matches(matches, roots, doms, complexity, indexes,
         item_matches = [im for im, _ in item_match_and_roots]
         item_roots = [(im.page_key, im.root) for im, _ in item_match_and_roots]
         item_plan = train_scraper_for_matches(
-            item_matches, item_roots, doms, complexity, indexes,
-            spark=spark, spark_verify_threshold=spark_verify_threshold,
-        )
+            item_matches, item_roots, doms, complexity, indexes)
         return list_plan(css_selector(rule), item_plan)
 
     raise RuntimeError(f"type not matched: {found_type}")

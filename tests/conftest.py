@@ -65,6 +65,23 @@ GITHUB_PROFILES = {
 }
 
 
+def jobs_submitted(spark, fn):
+    """``(fn(), Spark jobs submitted while it ran)``, counted by diffing
+    job ids in the driver status store: the crawl's snapshot writes run in
+    a thread pool, which a job group set on this thread does not reach."""
+    sc = spark.sparkContext._jsc.sc()
+    bus, store = sc.listenerBus(), sc.statusStore()
+
+    def job_ids():
+        bus.waitUntilEmpty()
+        jobs = store.jobsList(None)
+        return [jobs.apply(i).jobId() for i in range(jobs.size())]
+
+    before = max(job_ids(), default=-1)
+    out = fn()
+    return out, sum(1 for j in job_ids() if j > before)
+
+
 @pytest.fixture(scope="session")
 def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "4")

@@ -20,6 +20,7 @@ from mlscraper_spark.crawl.engine import (
 from mlscraper_spark.crawl.oracle import crawl_oracle
 from mlscraper_spark.crawl.synthweb import WebConfig
 from mlscraper_spark.crawl.urlnorm import canonicalize, url_hash
+from tests.conftest import jobs_submitted
 
 WEB = WebConfig(n_hosts=12, max_pages_per_host=40)
 SEEDS = WEB.seeds(4)
@@ -30,6 +31,28 @@ EPOCHS = 5
 @pytest.fixture(scope="module")
 def oracle_state():
     return crawl_oracle(SEEDS, WEB, budget_per_host=BUDGET, max_epochs=EPOCHS)
+
+
+@pytest.fixture(scope="module")
+def engine_root(spark, tmp_path_factory):
+    """Root of the engine's crawl of the oracle's web, seeds and budget —
+    shared by the tests that compare a finished crawl with the oracle."""
+    root = str(tmp_path_factory.mktemp("crawl"))
+    run_crawl(spark, root, SEEDS, WEB, CrawlConfig(budget_per_host=BUDGET),
+              max_epochs=EPOCHS)
+    return root
+
+
+def test_crawl_config_rejects_invalid_values():
+    """A bad politeness or filter setting fails at construction, with a
+    ValueError, before anything is seeded or fetched."""
+    for kw in ({"budget_per_host": 0},
+               {"budget_per_host": 3, "tokens_capacity": 2},
+               {"filter_buckets": 0},
+               {"filter_buckets": 3}):
+        with pytest.raises(ValueError):
+            CrawlConfig(**kw)
+    CrawlConfig(budget_per_host=3, tokens_capacity=3, filter_buckets=1)
 
 
 def test_oracle_sanity(oracle_state):
@@ -60,14 +83,10 @@ def test_oracle_deterministic(oracle_state):
     assert again.url_seen == oracle_state.url_seen
 
 
-def test_engine_matches_oracle(spark, tmp_path, oracle_state):
-    root = str(tmp_path / "crawl")
-    run_crawl(spark, root, SEEDS, WEB, CrawlConfig(budget_per_host=BUDGET),
-              max_epochs=EPOCHS)
-
+def test_engine_matches_oracle(spark, engine_root, oracle_state):
     log = [
         (r.epoch, r.seq, r.url_canon, r.host, r.status, r.n_links, r.n_images)
-        for r in read_fetch_log(spark, root).sort("epoch", "seq").collect()
+        for r in read_fetch_log(spark, engine_root).sort("epoch", "seq").collect()
     ]
     want = [
         (r["epoch"], r["seq"], r["url_canon"], r["host"], r["status"],
@@ -76,8 +95,8 @@ def test_engine_matches_oracle(spark, tmp_path, oracle_state):
     ]
     assert log == want, "fetch order must match the oracle bit-for-bit"
 
-    last = last_complete_epoch(root)
-    seen = {r.url_canon for r in read_url_seen(spark, root, last).collect()}
+    last = last_complete_epoch(engine_root)
+    seen = {r.url_canon for r in read_url_seen(spark, engine_root, last).collect()}
     assert seen == oracle_state.url_seen
 
 
@@ -205,23 +224,6 @@ def test_clean_buckets_carry_forward(spark, tmp_path):
     assert _fetch_log_tuples(spark, root) == log
 
 
-def _jobs_submitted(spark, fn):
-    """``(fn(), Spark jobs submitted while it ran)``, counted by diffing
-    job ids in the driver status store: the snapshot writes run in a
-    thread pool, which a job group set on this thread does not reach."""
-    sc = spark.sparkContext._jsc.sc()
-    bus, store = sc.listenerBus(), sc.statusStore()
-
-    def job_ids():
-        bus.waitUntilEmpty()
-        jobs = store.jobsList(None)
-        return [jobs.apply(i).jobId() for i in range(jobs.size())]
-
-    before = max(job_ids(), default=-1)
-    out = fn()
-    return out, sum(1 for j in job_ids() if j > before)
-
-
 def test_seed_and_epoch_job_budget(spark, tmp_path):
     """Spark jobs per call on a small web stay within budget: 10 for
     seed_crawl (which runs the epoch's discovery stage), 31 per fetching
@@ -234,11 +236,11 @@ def test_seed_and_epoch_job_budget(spark, tmp_path):
     web = WebConfig(n_hosts=2, max_pages_per_host=4)
     cfg = CrawlConfig(budget_per_host=2, n_buckets=8)
     root = str(tmp_path / "jobs")
-    _, n_seed = _jobs_submitted(
+    _, n_seed = jobs_submitted(
         spark, lambda: seed_crawl(spark, root, web.seeds(2), web, cfg))
     n_epoch = []
     for e in range(10):
-        n, jobs = _jobs_submitted(
+        n, jobs = jobs_submitted(
             spark, lambda: run_epoch(spark, root, e, web, cfg))
         n_epoch.append(jobs)
         if n == 0:
@@ -321,10 +323,10 @@ def test_failed_snapshot_write_leaves_no_manifest(spark, tmp_path, table,
     target = os.path.join(_snap_dir(root, epoch), table)
 
     class FailingFormat(ParquetSnapshotFormat):
-        def write(self, df, path, mode="overwrite"):
+        def write(self, df, path):
             if path == target:
                 raise RuntimeError(f"injected write failure: {path}")
-            super().write(df, path, mode)
+            super().write(df, path)
 
     def persistent_rdds():
         return spark.sparkContext._jsc.getPersistentRDDs().size()
@@ -428,12 +430,8 @@ def test_link_scanner_matches_parser():
     the full DOM parse returns over the crawl corpus (every page of a
     whole synthetic web incl. redirects/entities/private pages), and
     never crashes on garbage bytes."""
-    from mlscraper_spark.crawl.synthweb import (
-        extract_images,
-        extract_links,
-        fetch,
-        response_meta,
-    )
+    from mlscraper_spark.crawl.fetchers import parse_links_and_images
+    from mlscraper_spark.crawl.synthweb import fetch, response_meta
 
     web = WebConfig(n_hosts=10, max_pages_per_host=30, enable_aliases=True)
     n_pages_checked = 0
@@ -442,9 +440,8 @@ def test_link_scanner_matches_parser():
             url = f"http://{web.host_name(i)}/page/{j}"
             status, html = fetch(url, web)
             assert status == 200
-            links, n_img = response_meta(url, status, html, web)
-            assert links == extract_links(html)
-            assert n_img == len(extract_images(html))
+            assert (response_meta(url, status, html, web)
+                    == parse_links_and_images(html))
             n_pages_checked += 1
     assert n_pages_checked > 100
     for garbage in (b"", b"<<<", b"<a href=", b"\xff\xfe\x00junk",
@@ -453,7 +450,7 @@ def test_link_scanner_matches_parser():
         assert isinstance(links, list) and isinstance(n_img, int)
 
 
-def test_content_fingerprint_and_dedup_match_oracle(spark, tmp_path,
+def test_content_fingerprint_and_dedup_match_oracle(spark, engine_root,
                                                     oracle_state):
     """fetch_log carries a page_fp content fingerprint (md5-derived 64-bit
     hash of the 200-response body — urlnorm.content_fp — NULL otherwise);
@@ -465,12 +462,9 @@ def test_content_fingerprint_and_dedup_match_oracle(spark, tmp_path,
 
     from mlscraper_spark.crawl.engine import content_dup_groups
 
-    root = str(tmp_path / "fp")
-    run_crawl(spark, root, SEEDS, WEB, CrawlConfig(budget_per_host=BUDGET),
-              max_epochs=EPOCHS)
     got = {
         (r.epoch, r.seq): (r.url_canon, r.page_fp)
-        for r in read_fetch_log(spark, root).collect()
+        for r in read_fetch_log(spark, engine_root).collect()
     }
     want = {
         (r["epoch"], r["seq"]): (r["url_canon"], r["page_fp"])
@@ -488,7 +482,7 @@ def test_content_fingerprint_and_dedup_match_oracle(spark, tmp_path,
     assert want_groups, "web too small to produce content mirrors"
     got_groups = {
         (r.page_fp, r.n_urls, r.canonical_url)
-        for r in content_dup_groups(spark, root).collect()
+        for r in content_dup_groups(spark, engine_root).collect()
     }
     assert got_groups == want_groups
 
@@ -765,9 +759,9 @@ def test_table_format_seam_contract(spark, tmp_path, oracle_state):
             self.reads: list[str] = []
             self.probes: list[str] = []
 
-        def write(self, df, path, mode="overwrite"):
+        def write(self, df, path):
             self.writes.append(path)
-            super().write(df, path, mode)
+            super().write(df, path)
 
         def read(self, spark_, paths, schema=None):
             self.reads.extend(paths)
@@ -989,11 +983,10 @@ def test_engine_robots_filter_matches_python_predicate(spark):
     including Allow rules, length ties, and empty paths — or the engine
     would diverge from an HttpFetchAdapter-governed oracle."""
     import json as _json
-
-    from pyspark.sql import functions as F
+    from urllib.parse import urlsplit
 
     from mlscraper_spark.crawl.engine import _filter_robots
-    from mlscraper_spark.crawl.fetchers import robots_blocked
+    from mlscraper_spark.crawl.fetchers import FetchAdapter, robots_blocked
 
     rule_sets = {
         "h0.test": ["/a", "+/a/b", "/a/b/c"],
@@ -1005,14 +998,15 @@ def test_engine_robots_filter_matches_python_predicate(spark):
     paths = ["/a", "/a/b", "/a/b/c/d", "/a/bq", "/x/y", "/private/3",
              "/only-allow/z", "/", "", "/q?k=v"]
     rows = [(f"http://{h}{p}", h) for h in rule_sets for p in paths]
-    df = spark.createDataFrame(rows, "url_canon string, host string")
+    df = spark.createDataFrame(
+        [(u, h, urlsplit(u).path) for u, h in rows],
+        "url_canon string, host string, path string")
     robots = spark.createDataFrame(
         [(h, _json.dumps(r), 0) for h, r in rule_sets.items()],
         "host string, rules_json string, fetched_epoch int")
-    kept = {r.url_canon for r in _filter_robots(df, robots).collect()}
+    kept = {r.url_canon
+            for r in _filter_robots(df, robots, FetchAdapter()).collect()}
     for u, h in rows:
-        from urllib.parse import urlsplit
-
         want_blocked = robots_blocked(urlsplit(u).path, rule_sets[h])
         assert (u not in kept) == want_blocked, (u, rule_sets[h])
 

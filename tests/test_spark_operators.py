@@ -12,7 +12,7 @@ from mlscraper_spark.operators.explode import explode_pages
 from mlscraper_spark.operators.extract import extract_list_items, extract_with_plan
 from mlscraper_spark.operators.matching import build_value_match_index, scan_matches
 from mlscraper_spark.training.matches import scan_value_matches
-from tests.conftest import SO_ITEM, reference_fixture
+from tests.conftest import SO_ITEM, jobs_submitted, reference_fixture
 
 
 def _pages_df(spark, pages):
@@ -120,6 +120,20 @@ def test_train_scraper_spark_end_to_end(spark):
     result = scrape(_pages_df(spark, [("rowling", quotes_author_page("rowling"))]), plan)
     value = json.loads(result.collect()[0].value_json)
     assert value == {"name": "J.K. Rowling", "born": "July 31, 1965"}
+
+
+def test_train_scraper_spark_job_budget(spark):
+    """Quotes training with ``spark`` trains the driver-side plan and
+    submits at most 11 Spark jobs: the distributed match scan is the
+    only Spark work, selector-uniqueness verification stays inline."""
+    from mlscraper_spark.api import train_scraper
+
+    examples = [(quotes_author_page("einstein"),
+                 {"name": "Albert Einstein", "born": "March 14, 1879"})]
+    plan, n_jobs = jobs_submitted(
+        spark, lambda: train_scraper(examples, spark=spark))
+    assert plan == train_scraper(examples)
+    assert n_jobs <= 11, n_jobs
 
 
 def test_stackoverflow_golden_with_spark_scan(spark):

@@ -9,11 +9,11 @@ from mlscraper_spark.training.train import train_scraper
 from tests.conftest import GITHUB_PROFILES, SO_ITEM, reference_fixture
 
 
-def _train(pages_values, complexity=100, **kw):
+def _train(pages_values, complexity=100):
     ts = TrainingSet()
     for i, (html, value) in enumerate(pages_values):
         ts.add_sample(Sample(SamplePage(f"s{i}", html), value))
-    return train_scraper(ts, complexity=complexity, **kw)
+    return train_scraper(ts, complexity=complexity)
 
 
 def test_train_scraper_simple_list():
@@ -71,21 +71,6 @@ def test_train_scraper_github():
     plan = _train(pv, complexity=2)
     target = reference_fixture("github/jonashaag.html")
     assert apply_plan_to_html(target, plan) == GITHUB_PROFILES["jonashaag"]
-
-
-def test_github_golden_via_spark_verification(spark):
-    """J6 distributed: force EVERY uniqueness verification through the
-    Spark fan-out (threshold 0) and require the exact plan the inline
-    path trains, plus the same third-profile extraction."""
-    pv = [
-        (reference_fixture(f"github/{login}.html"), GITHUB_PROFILES[login])
-        for login in ["lorey", "siboehm"]
-    ]
-    plan_inline = _train(pv, complexity=2)
-    plan_spark = _train(pv, complexity=2, spark=spark, spark_verify_threshold=0)
-    assert plan_spark == plan_inline
-    target = reference_fixture("github/jonashaag.html")
-    assert apply_plan_to_html(target, plan_spark) == GITHUB_PROFILES["jonashaag"]
 
 
 def test_quotes_example_offline():
