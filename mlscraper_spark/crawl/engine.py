@@ -31,8 +31,9 @@ Design (SURVEY.md §7.4), round-2 architecture:
 * **URL-seen** (P10): per-host_bucket cuckoo filters split *discovery
   deltas* (never the whole frontier — rows already in the frontier are
   unseen by construction) into "definitely new" (skip the join) and
-  "maybe seen" (exact anti-join against url_seen — the ground truth, so
-  filter false positives cost time, never correctness).
+  "maybe seen" (exact anti-join against URL-seen, the latest
+  ``url_seen_base`` plus the ``fetch_log`` tables after it — the ground
+  truth, so filter false positives cost time, never correctness).
 * **Skew**: everything keyed by ``host_bucket = pmod(xxhash64(host),
   NB)``; AQE skew-join handles residual imbalance.
 * **Frontier merge**: per URL keep (MIN depth, MIN discovered_epoch) —
@@ -60,13 +61,14 @@ from pyspark.sql import types as T
 
 from mlscraper_spark.crawl.fetchers import SynthWebAdapter
 from mlscraper_spark.crawl.synthweb import WebConfig
+from mlscraper_spark.streaming.pipeline import crawl_monitor
 from mlscraper_spark.tables import get_table_format
 
 FRONTIER_SCHEMA = (
     "url_canon string, url_hash long, host string, host_bucket int, "
     "priority double, depth int, discovered_epoch int"
 )
-SEEN_SCHEMA = "url_canon string, url_hash long, host_bucket int, seen_epoch int"
+SEEN_SCHEMA = "url_canon string"
 FETCHLOG_SCHEMA = (
     "epoch int, seq int, url_canon string, host string, status int, "
     "n_links int, n_images int, page_fp long"
@@ -108,9 +110,9 @@ class CrawlConfig:
     # this many canonicalized characters — repeated-path-segment traps
     # (/a/a/a/...) grow the URL every hop, so a length cap cuts the cycle
     # even when depth alone would admit it.  None = unbounded.
-    seen_compact_every: int = 16  # every K epochs the url_seen deltas are
+    seen_compact_every: int = 16  # every K epochs the URL-seen set is
     # compacted into a full url_seen_base table in that snapshot, so the
-    # per-epoch read unions ≤ K deltas + 1 base instead of the crawl's
+    # per-epoch read unions ≤ K fetch logs + 1 base instead of the crawl's
     # whole history (10^4-epoch crawls would otherwise pay a
     # linearly-growing listing + tiny-file scan every epoch)
 
@@ -136,6 +138,13 @@ def _manifest_path(root: str, epoch: int) -> str:
 
 
 _SNAP_RE = re.compile(r"^snap_(\d{5})$")
+
+
+def _check_local_root(root: str) -> None:
+    """Manifests go through ``open`` and parquet tables are probed with
+    ``os.path.isdir``: on a URI root every optional table reads as absent."""
+    if re.match(r"[A-Za-z][A-Za-z0-9+.-]*:", root):
+        raise ValueError(f"crawl root must be a local path, not a URI: {root!r}")
 
 
 def last_complete_epoch(root: str) -> int | None:
@@ -229,9 +238,9 @@ def read_frontier(spark: SparkSession, root: str, epoch: int,
     return out
 
 
-def _with_host_bucket(df: DataFrame, cfg: CrawlConfig) -> DataFrame:
+def _with_host_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
     return df.withColumn(
-        "host_bucket", F.pmod(F.xxhash64("host"), F.lit(cfg.n_buckets)).cast("int")
+        "host_bucket", F.pmod(F.xxhash64("host"), F.lit(n_buckets)).cast("int")
     )
 
 
@@ -470,9 +479,15 @@ def _commit_snapshot(spark: SparkSession, root: str, epoch: int,
     ``writes``; readers take its absence as empty (``_read_existing``)."""
     fmt = get_table_format(spark)
     d = _snap_dir(root, epoch)
+
+    def write(df: DataFrame, name: str) -> None:
+        # labels this thread's jobs, AQE stage jobs included
+        spark.sparkContext.setLocalProperty("spark.job.description",
+                                            f"write:{name}")
+        fmt.write(df, os.path.join(d, name))
+
     with ThreadPoolExecutor(max_workers=len(writes)) as pool:
-        futs = [pool.submit(fmt.write, df, os.path.join(d, name))
-                for df, name in writes]
+        futs = [pool.submit(write, df, name) for df, name in writes]
         for fut in futs:
             fut.result()  # propagate failures before the manifest exists
     with open(_manifest_path(root, epoch), "w") as f:
@@ -519,7 +534,7 @@ def _discover(spark: SparkSession, rows: DataFrame, epoch: int,
     caches.append(robots_new)
     known = robots_new if robots is None else robots.unionByName(robots_new)
     disc = _filter_robots(disc, known, adapter)
-    return _with_host_bucket(disc, cfg).withColumns({
+    return _with_host_bucket(disc, cfg.n_buckets).withColumns({
         "url_hash": F.xxhash64("url_canon"),
         "discovered_epoch": F.lit(epoch + 1),
     }).select(*_IDENTITY_COLS), robots_new
@@ -528,7 +543,7 @@ def _discover(spark: SparkSession, rows: DataFrame, epoch: int,
 def seed_crawl(spark: SparkSession, root: str, seeds, web: WebConfig,
                cfg: CrawlConfig, fetch_adapter=None) -> None:
     """Write the epoch=-1 snapshot: the seeded frontier and the seed
-    hosts' robots rules.  url_seen and the filters start empty, so the
+    hosts' robots rules.  URL-seen and the filters start empty, so the
     snapshot has no table for them (see ``_read_existing``).
     Seeds are epoch -1's discoveries at depth 0: they go through the
     epoch's discovery stage (``_discover``), robots resolved by
@@ -540,6 +555,7 @@ def seed_crawl(spark: SparkSession, root: str, seeds, web: WebConfig,
     distributedly, never materialized on the driver.  A driver list is
     embedded into every task binary — ~8 MB at 1.2M seeds, a
     cores-independent cost the N-vs-4N ladder measures directly)."""
+    _check_local_root(root)
     adapter = fetch_adapter or SynthWebAdapter(web)
     if isinstance(seeds, DataFrame):
         raw = seeds.select(F.col(seeds.columns[0]).cast("string").alias("raw"))
@@ -818,10 +834,6 @@ def _assign_global_seq(spark: SparkSession, df: DataFrame) -> tuple[DataFrame, i
     for pid in sorted(counts):
         offsets.append((pid, acc))
         acc += counts[pid]
-    if not offsets:
-        return (
-            ranked.withColumn("seq", F.lit(0)).drop("_pid", "_rn").limit(0), 0
-        )
     off_df = spark.createDataFrame(offsets, "_pid long, _off long")
     out = (
         ranked.join(F.broadcast(off_df), "_pid")
@@ -972,8 +984,8 @@ def _merge_frontier_delta(old_dirty: DataFrame, vetted: DataFrame,
 
     Correct because url_hash/host/host_bucket are pure functions of
     url_canon (any non-null FIRST is exact), vetted never contains a
-    fetched URL (the seen-check already excludes this epoch's
-    seen_delta), and MIN/MAX are union-order-insensitive."""
+    fetched URL (the seen-check already excludes this epoch's selected
+    URLs), and MIN/MAX are union-order-insensitive."""
     rows = (
         old_dirty.select(*_IDENTITY_COLS).withColumn("_fetched", F.lit(0))
         .unionByName(
@@ -999,7 +1011,7 @@ def _merge_frontier_delta(old_dirty: DataFrame, vetted: DataFrame,
     )
 
 
-def _update_and_split(filters: DataFrame, seen_delta: DataFrame,
+def _update_and_split(filters: DataFrame, selected: DataFrame,
                       cand: DataFrame, cfg: CrawlConfig) -> DataFrame:
     """ONE cogroup pass per host_bucket: insert this epoch's fetched
     url_hashes into the bucket's cuckoo blob, then flag the bucket's
@@ -1027,8 +1039,8 @@ def _update_and_split(filters: DataFrame, seen_delta: DataFrame,
     cand_dtypes = cand.dtypes
     cand_cols = [c for c, _ in cand_dtypes]
     tagged = cand.withColumn("is_seen", F.lit(False)).unionByName(
-        seen_delta.select("host_bucket", "url_hash",
-                          F.lit(True).alias("is_seen")),
+        selected.select("host_bucket", "url_hash",
+                        F.lit(True).alias("is_seen")),
         allowMissingColumns=True,
     )
     out_schema = (
@@ -1082,25 +1094,33 @@ def _base_epoch(root: str, epoch: int, key: str) -> int | None:
 
 
 def _read_base_plus_deltas(spark: SparkSession, root: str, upto_epoch: int,
-                           base_key: str, table: str, schema: str) -> DataFrame:
+                           base_key: str, base_table: str, delta_table: str,
+                           schema: str) -> DataFrame:
     """An append-only table as of a snapshot: the latest compacted
-    ``{table}_base`` (if any) plus the ``{table}_delta`` dirs after it —
-    the Iceberg base+delta shape; periodic compaction bounds the union
-    width at seen_compact_every regardless of crawl age."""
+    ``base_table`` (if any) plus the ``delta_table`` dirs after it — the
+    Iceberg base+delta shape; periodic compaction bounds the union width
+    at seen_compact_every regardless of crawl age.  Base and deltas are
+    projected to ``schema`` separately (URL-seen's deltas are the wider
+    fetch logs; ``IcebergSnapshotFormat.read`` ignores ``schema``)."""
+    cols = [c.split()[0] for c in schema.split(",")]
     base = _base_epoch(root, upto_epoch, base_key)
-    paths = []
-    start = -1
+    start = -1 if base is None else base + 1
+    out = _read_existing(spark, [
+        os.path.join(_snap_dir(root, e), delta_table)
+        for e in range(start, upto_epoch + 1)
+    ], schema).select(*cols)
     if base is not None:
-        paths.append(os.path.join(_snap_dir(root, base), f"{table}_base"))
-        start = base + 1
-    paths += [os.path.join(_snap_dir(root, e), f"{table}_delta")
-              for e in range(start, upto_epoch + 1)]
-    return _read_existing(spark, paths, schema)
+        out = _read_existing(
+            spark, [os.path.join(_snap_dir(root, base), base_table)], schema,
+        ).select(*cols).unionByName(out)
+    return out
 
 
 def read_url_seen(spark: SparkSession, root: str, upto_epoch: int) -> DataFrame:
+    """The URLs fetched up to ``upto_epoch`` (the oracle's ``url_seen``)."""
     return _read_base_plus_deltas(
-        spark, root, upto_epoch, "seen_base_epoch", "url_seen", SEEN_SCHEMA
+        spark, root, upto_epoch, "seen_base_epoch", "url_seen_base",
+        "fetch_log", SEEN_SCHEMA,
     )
 
 
@@ -1134,7 +1154,8 @@ def _next_host_tokens(host_tokens: DataFrame, sel_counts: DataFrame,
 
 def read_robots(spark: SparkSession, root: str, upto_epoch: int) -> DataFrame:
     return _read_base_plus_deltas(
-        spark, root, upto_epoch, "robots_base_epoch", "robots", ROBOTS_SCHEMA
+        spark, root, upto_epoch, "robots_base_epoch", "robots_base",
+        "robots_delta", ROBOTS_SCHEMA,
     )
 
 
@@ -1153,6 +1174,7 @@ def run_epoch(spark: SparkSession, root: str, epoch: int, web: WebConfig,
     refills — every host with a frontier row has at least one token).
     ``scraper_plan``/``emit_images`` add the epoch's payload tables (see
     ``run_crawl``)."""
+    _check_local_root(root)
     adapter = fetch_adapter or SynthWebAdapter(web)
     refs = _frontier_refs(root, epoch - 1)
     host_tokens = read_host_tokens(spark, root, epoch - 1)
@@ -1214,12 +1236,10 @@ def run_epoch(spark: SparkSession, root: str, epoch: int, web: WebConfig,
         )
 
         # ---- fused cuckoo update + seen-check of the DELTA only (P10/E5)
-        seen_delta = selected.select(
-            "url_canon", "url_hash", "host_bucket",
-            F.lit(epoch).alias("seen_epoch"),
-        )
+        # this epoch's fetch log holds exactly the selected URLs, so the
+        # URL-seen set after the epoch is the set before it plus selected
         url_seen_all = read_url_seen(spark, root, epoch - 1).unionByName(
-            seen_delta
+            selected.select("url_canon")
         )
         filters = _read_existing(
             spark, [os.path.join(_snap_dir(root, epoch - 1), "filters")],
@@ -1229,7 +1249,7 @@ def run_epoch(spark: SparkSession, root: str, epoch: int, web: WebConfig,
         # fingerprint collect, AND both flag branches — without it the
         # whole discovery pipeline + blob rebuild would run once per
         # consumer
-        fused = _update_and_split(filters, seen_delta, adds, cfg).cache()
+        fused = _update_and_split(filters, selected, adds, cfg).cache()
         caches.append(fused)
         filters_new = fused.filter(F.col("kind") == "f").select(
             "host_bucket", "blob", "fingerprint"
@@ -1239,9 +1259,7 @@ def run_epoch(spark: SparkSession, root: str, epoch: int, web: WebConfig,
         )
         definitely_new = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
         maybe = flagged.filter(F.col("maybe_seen")).drop("maybe_seen")
-        survived = maybe.join(
-            url_seen_all.select("url_canon"), "url_canon", "left_anti"
-        )
+        survived = maybe.join(url_seen_all, "url_canon", "left_anti")
         vetted = definitely_new.unionByName(survived).cache()
         caches.append(vetted)
 
@@ -1279,19 +1297,12 @@ def run_epoch(spark: SparkSession, root: str, epoch: int, web: WebConfig,
         # ---- snapshot ----------------------------------------------------
         writes = [
             (_frontier_layout(frontier_dirty, max(1, len(dirty))), "frontier"),
-            (seen_delta, "url_seen_delta"),
             (fetched.select(
                 F.lit(epoch).alias("epoch"), "seq", "url_canon", "host",
                 "status", "n_links", "n_images", "page_fp",
             ), "fetch_log"),
             (robots_new, "robots_delta"),
             (filters_new, "filters"),
-            # metrics (A8)
-            (fetched.groupBy("host_bucket").agg(
-                F.count(F.lit(1)).alias("n_fetched"),
-                F.sum("n_links").alias("n_links"),
-                F.sum("n_images").alias("n_images"),
-            ).withColumn("epoch", F.lit(epoch)), "metrics"),
         ]
         # payload tables come from the columns the fetch stage already
         # emitted into the cached ``fetched`` frame: no second fetch or
@@ -1317,7 +1328,7 @@ def run_epoch(spark: SparkSession, root: str, epoch: int, web: WebConfig,
             writes.append(
                 (_next_host_tokens(host_tokens, sel_counts, cfg), "host_tokens")
             )
-        # periodic url_seen/robots compaction: fold base + all deltas
+        # periodic URL-seen/robots compaction: fold base + all deltas
         # (incl. this epoch's) into a fresh base so reads stay
         # O(seen_compact_every) wide regardless of crawl age
         compact = (epoch + 1) % cfg.seen_compact_every == 0
@@ -1426,3 +1437,10 @@ def content_dup_groups(spark: SparkSession, root: str) -> DataFrame:
         )
         .filter(F.col("n_urls") > 1)
     )
+
+
+def crawl_metrics(spark: SparkSession, root: str, n_buckets: int) -> DataFrame:
+    """Per-epoch, per-host_bucket crawl counters (A8): ``crawl_monitor``
+    over the fetch log, keyed by ``(epoch, host_bucket)``."""
+    return crawl_monitor(
+        _with_host_bucket(read_fetch_log(spark, root), n_buckets), "host_bucket")

@@ -212,12 +212,6 @@ def response_meta(url_canon: str, status: int, html: bytes,
     return [], 0
 
 
-def response_links(url_canon: str, status: int, html: bytes,
-                   cfg: WebConfig) -> list[str]:
-    """Outgoing raw hrefs only (see ``response_meta``)."""
-    return response_meta(url_canon, status, html, cfg)[0]
-
-
 def fetch(url_canon: str, cfg: WebConfig) -> tuple[int, bytes]:
     """(status, html) — pure function of the canonical URL."""
     target = redirect_of(url_canon, cfg)

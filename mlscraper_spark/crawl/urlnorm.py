@@ -20,33 +20,17 @@ _PRIME4 = 0x85EBCA77C2B2AE63
 _PRIME5 = 0x27D4EB2F165667C5
 
 
-def _rotl(x: int, r: int) -> int:
-    return ((x << r) | (x >> (64 - r))) & _MASK
-
-
-def _round(acc: int, inp: int) -> int:
-    acc = (acc + inp * _PRIME2) & _MASK
-    acc = _rotl(acc, 31)
-    return (acc * _PRIME1) & _MASK
-
-
-def _merge_round(acc: int, val: int) -> int:
-    acc ^= _round(0, val)
-    return (acc * _PRIME1 + _PRIME4) & _MASK
-
-
 def xxhash64(data: bytes, seed: int = 42,
              _from_bytes=int.from_bytes) -> int:
     """XXH64, returned as a *signed* 64-bit int to match Spark's LongType.
 
     Default seed 42 matches Spark's XxHash64 expression default.
 
-    The rotate/round helpers are inlined: this function runs 13x per
-    fetched page in the synthetic web's content derivation (``_h``), and
-    the call overhead of ``_rotl``/``_round`` was ~40% of its runtime at
-    the bench crawl width (r6 profile).  Values are bit-identical to the
-    helper-based form (same arithmetic, test-pinned against Spark's JVM
-    expression)."""
+    The XXH64 rotate and round steps are written inline: this function
+    runs 13x per fetched page in the synthetic web's content derivation
+    (``_h``), and calling them as helpers was ~40% of its runtime at the
+    bench crawl width (r6 profile).  Values are test-pinned against
+    Spark's JVM expression."""
     n = len(data)
     i = 0
     if n >= 32:

@@ -29,7 +29,6 @@ from dataclasses import dataclass, field
 from mlscraper_spark.dom.parser import NodeRec
 
 _IDENT_RE = re.compile(r"[A-Za-z_][\w\-]*")
-_NUM_RE = re.compile(r"\d+")
 _ATTR_OPS = ("~=", "^=", "$=", "*=", "|=", "=")
 
 

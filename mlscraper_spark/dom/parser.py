@@ -228,11 +228,13 @@ def parse_html(data: bytes | str, text_ancestors: bool = False) -> list[NodeRec]
         walk(r, -1, [], pos)
     # P2 precompute (post-pass: ancestor text is only final after walk):
     # ancestors with identical stripped subtree text, nearest first — the
-    # same set the former nodes⋈nodes ancestor join produced
+    # same set the former nodes⋈nodes ancestor join produced.  A child's
+    # stripped text is a substring of its parent's, so that set is a chain
+    # from the node: it ends at the first ancestor whose text differs
     if text_ancestors:
         for rec in records:
-            t = rec.text
-            rec.text_anc_ids = [
-                aid for aid in rec.ancestor_ids if records[aid].text == t
-            ]
+            for aid in rec.ancestor_ids:
+                if records[aid].text != rec.text:
+                    break
+                rec.text_anc_ids.append(aid)
     return records

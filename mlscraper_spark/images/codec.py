@@ -143,7 +143,6 @@ def _decode_jpeg(data: bytes) -> np.ndarray:
 
 ENCODERS = {"ppm": encode_ppm, "dctq": encode_dctq, "jpeg": _encode_jpeg}
 DECODERS = {"ppm": decode_ppm, "dctq": decode_dctq, "jpeg": _decode_jpeg}
-LOSSLESS = {"ppm"}
 
 
 def encode(img: np.ndarray, fmt: str) -> bytes:

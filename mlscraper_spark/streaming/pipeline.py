@@ -46,7 +46,7 @@ def windowed_event_counts(events: DataFrame, window: str = "6 hours",
 
 def stream_events(spark: SparkSession, events_dir: str) -> DataFrame:
     """Streaming source over an events directory, via the TableFormat
-    seam (the crawl's metrics/fetch_log tables stream the same way —
+    seam (the crawl's fetch_log tables stream the same way —
     append-only deltas arrive as new commits/files)."""
     from mlscraper_spark.tables import get_table_format
 
@@ -90,13 +90,14 @@ def stateful_sessionize(events: DataFrame, gap_seconds: int = 3600) -> DataFrame
     )
 
 
-def crawl_monitor(fetch_log: DataFrame) -> DataFrame:
-    """Shared batch/stream crawl-monitoring aggregation: per-epoch fetch
-    counts, discovered links/images, and non-200 errors.  Batch form runs
-    over ``read_fetch_log``; streaming form tails the same append-only
-    snapshot dirs live (``stream_fetch_log``) so an operator can watch a
-    crawl without re-reading its history — the test pins stream == batch."""
-    return fetch_log.groupBy("epoch").agg(
+def crawl_monitor(fetch_log: DataFrame, *keys: str) -> DataFrame:
+    """Shared batch/stream crawl-monitoring aggregation: per-epoch (and
+    per ``keys``) fetch counts, discovered links/images, and non-200
+    errors.  Batch form runs over ``read_fetch_log``; streaming form tails
+    the same append-only snapshot dirs live (``stream_fetch_log``) so an
+    operator can watch a crawl without re-reading its history — the test
+    pins stream == batch."""
+    return fetch_log.groupBy("epoch", *keys).agg(
         F.count(F.lit(1)).alias("n_fetched"),
         F.sum("n_links").alias("n_links"),
         F.sum("n_images").alias("n_images"),

@@ -65,21 +65,32 @@ GITHUB_PROFILES = {
 }
 
 
-def jobs_submitted(spark, fn):
-    """``(fn(), Spark jobs submitted while it ran)``, counted by diffing
-    job ids in the driver status store: the crawl's snapshot writes run in
-    a thread pool, which a job group set on this thread does not reach."""
+def job_labels(spark, fn):
+    """``(fn(), labels of the Spark jobs submitted while it ran)``, found
+    by diffing job ids in the driver status store: the crawl's snapshot
+    writes run in a thread pool, which a job group set on this thread
+    does not reach.  A job's label is its ``spark.job.description`` if it
+    has one, else its call-site name."""
     sc = spark.sparkContext._jsc.sc()
     bus, store = sc.listenerBus(), sc.statusStore()
 
-    def job_ids():
+    def jobs():
         bus.waitUntilEmpty()
         jobs = store.jobsList(None)
-        return [jobs.apply(i).jobId() for i in range(jobs.size())]
+        return [jobs.apply(i) for i in range(jobs.size())]
 
-    before = max(job_ids(), default=-1)
+    before = max((j.jobId() for j in jobs()), default=-1)
     out = fn()
-    return out, sum(1 for j in job_ids() if j > before)
+    return out, [
+        j.description().get() if j.description().isDefined() else j.name()
+        for j in sorted(jobs(), key=lambda j: j.jobId()) if j.jobId() > before
+    ]
+
+
+def jobs_submitted(spark, fn):
+    """``(fn(), number of Spark jobs submitted while it ran)``."""
+    out, labels = job_labels(spark, fn)
+    return out, len(labels)
 
 
 @pytest.fixture(scope="session")

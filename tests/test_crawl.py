@@ -20,12 +20,16 @@ from mlscraper_spark.crawl.engine import (
 from mlscraper_spark.crawl.oracle import crawl_oracle
 from mlscraper_spark.crawl.synthweb import WebConfig
 from mlscraper_spark.crawl.urlnorm import canonicalize, url_hash
-from tests.conftest import jobs_submitted
+from tests.conftest import job_labels, jobs_submitted
 
 WEB = WebConfig(n_hosts=12, max_pages_per_host=40)
 SEEDS = WEB.seeds(4)
 BUDGET = 2
 EPOCHS = 5
+# the URL-seen tables of roots written before URL-seen was read from the
+# fetch logs: a url_seen_delta per epoch and a url_seen_base, both with
+# these columns
+OLD_SEEN_SCHEMA = "url_canon string, url_hash long, host_bucket int, seen_epoch int"
 
 
 @pytest.fixture(scope="module")
@@ -98,6 +102,27 @@ def test_engine_matches_oracle(spark, engine_root, oracle_state):
     last = last_complete_epoch(engine_root)
     seen = {r.url_canon for r in read_url_seen(spark, engine_root, last).collect()}
     assert seen == oracle_state.url_seen
+
+
+def test_crawl_metrics_match_oracle(spark, engine_root, oracle_state):
+    """crawl_metrics, the per-epoch, per-host_bucket counters read from
+    the fetch log, equal the oracle's fetch log counted the same way; so
+    each epoch's sums over buckets equal that epoch's fetch count, links,
+    images and non-200 responses."""
+    from mlscraper_spark.crawl.engine import crawl_metrics
+    from mlscraper_spark.crawl.urlnorm import host_bucket
+
+    n_buckets = CrawlConfig().n_buckets
+    want = {}
+    for r in oracle_state.fetch_log:
+        key = (r["epoch"], host_bucket(r["host"], n_buckets))
+        n, links, images, errors = want.get(key, (0, 0, 0, 0))
+        want[key] = (n + 1, links + r["n_links"], images + r["n_images"],
+                     errors + (r["status"] != 200))
+    got = {(r.epoch, r.host_bucket):
+           (r.n_fetched, r.n_links, r.n_images, r.n_errors)
+           for r in crawl_metrics(spark, engine_root, n_buckets).collect()}
+    assert got == want
 
 
 def test_dataframe_seed_source_matches_list(spark, tmp_path, oracle_state):
@@ -226,30 +251,79 @@ def test_clean_buckets_carry_forward(spark, tmp_path):
 
 def test_seed_and_epoch_job_budget(spark, tmp_path):
     """Spark jobs per call on a small web stay within budget: 10 for
-    seed_crawl (which runs the epoch's discovery stage), 31 per fetching
-    run_epoch and 30 for epoch 0 (its absent url_seen and filters read as
+    seed_crawl (which runs the epoch's discovery stage), 28 per fetching
+    run_epoch and 27 for epoch 0 (its absent URL-seen and filters read as
     a zero-size relation, so the seen-check join stays a broadcast), and
     5 for the run_epoch that finds the frontier drained (it fetches
-    nothing and writes no snapshot)."""
-    from mlscraper_spark.crawl.engine import run_epoch, seed_crawl
+    nothing and writes no snapshot).  Every snapshot write job, AQE stage
+    jobs included, is labelled ``write:<table>``, and the labels of a
+    snapshot's jobs name exactly the tables it holds: for a fetching
+    epoch without payload, frontier, fetch_log, robots_delta and
+    filters."""
+    import os
+
+    from mlscraper_spark.crawl.engine import _snap_dir, run_epoch, seed_crawl
 
     web = WebConfig(n_hosts=2, max_pages_per_host=4)
     cfg = CrawlConfig(budget_per_host=2, n_buckets=8)
     root = str(tmp_path / "jobs")
-    _, n_seed = jobs_submitted(
+    _, seed_labels = job_labels(
         spark, lambda: seed_crawl(spark, root, web.seeds(2), web, cfg))
-    n_epoch = []
+    epoch_labels = []
     for e in range(10):
-        n, jobs = jobs_submitted(
+        n, labels = job_labels(
             spark, lambda: run_epoch(spark, root, e, web, cfg))
-        n_epoch.append(jobs)
+        epoch_labels.append(labels)
         if n == 0:
             break
     assert n == 0, "crawl did not drain"
-    assert n_seed <= 10, n_seed
-    assert n_epoch[0] <= 30, n_epoch
-    assert all(j <= 31 for j in n_epoch[:-1]), n_epoch
+    n_epoch = [len(labels) for labels in epoch_labels]
+    assert len(seed_labels) <= 10, seed_labels
+    assert n_epoch[0] <= 27, n_epoch
+    assert all(j <= 28 for j in n_epoch[:-1]), n_epoch
     assert n_epoch[-1] <= 5, n_epoch
+    for labels in [seed_labels] + epoch_labels:
+        assert not any("withThreadLocalCaptured" in x for x in labels), labels
+
+    def tables(epoch):
+        return set(os.listdir(_snap_dir(root, epoch))) - {"_manifest.json"}
+
+    for epoch, labels in [(-1, seed_labels)] + list(enumerate(epoch_labels[:-1])):
+        written = {x.removeprefix("write:") for x in labels
+                   if x.startswith("write:")}
+        assert written == tables(epoch), (epoch, labels)
+        if epoch >= 0:
+            assert written == {"frontier", "fetch_log", "robots_delta",
+                               "filters"}, epoch
+
+
+@pytest.mark.parametrize("root", ["file://{tmp}/crawl",
+                                  "hdfs://localhost:9000/crawl"])
+def test_uri_crawl_root_rejected(spark, tmp_path, root):
+    """Crawl roots are local paths (manifests go through ``open``, the
+    parquet format probes with ``os.path.isdir``, so a URI root would read
+    every optional table as absent): seed_crawl, run_epoch and run_crawl
+    raise a ValueError before any Spark job runs or anything is written."""
+    import os
+
+    from mlscraper_spark.crawl.engine import run_epoch, seed_crawl
+
+    root = root.format(tmp=tmp_path)
+    web = WebConfig(n_hosts=2, max_pages_per_host=4)
+    cfg = CrawlConfig(budget_per_host=2, n_buckets=8)
+
+    def rejected(call):
+        with pytest.raises(ValueError, match="not a URI"):
+            call()
+
+    for call in (lambda: seed_crawl(spark, root, web.seeds(2), web, cfg),
+                 lambda: run_epoch(spark, root, 0, web, cfg),
+                 lambda: run_crawl(spark, root, web.seeds(2), web, cfg,
+                                   max_epochs=2)):
+        _, n_jobs = jobs_submitted(spark, lambda: rejected(call))
+        assert n_jobs == 0
+    assert os.listdir(tmp_path) == []
+    assert not os.path.exists(root.split(":")[0] + ":")
 
 
 def test_seed_snapshot_holds_no_empty_tables(spark, tmp_path):
@@ -289,7 +363,7 @@ def test_seed_snapshot_holds_no_empty_tables(spark, tmp_path):
             assert df.count() == 0
 
     assert_empty()
-    for name, schema in (("url_seen_delta", SEEN_SCHEMA),
+    for name, schema in (("url_seen_delta", OLD_SEEN_SCHEMA),
                          ("filters", FILTERS_SCHEMA)):
         spark.createDataFrame([], schema).write.parquet(
             os.path.join(snap, name))
@@ -304,7 +378,8 @@ def test_seed_snapshot_holds_no_empty_tables(spark, tmp_path):
 
 
 @pytest.mark.parametrize("table,epoch", [("robots_delta", -1),
-                                         ("filters", 1)])
+                                         ("filters", 1),
+                                         ("fetch_log", 1)])
 def test_failed_snapshot_write_leaves_no_manifest(spark, tmp_path, table,
                                                   epoch):
     """A seam write that throws inside the snapshot's write pool fails the
@@ -366,11 +441,55 @@ def test_compaction_rewrites_and_stays_exact(spark, tmp_path):
     ]
 
 
+def _to_old_seen_layout(spark, root, cfg):
+    """Rewrite a crawl root into the layout written before URL-seen was
+    read from the fetch logs: its url_seen_base gets the old four
+    columns, and every fetching snapshot gets the url_seen_delta and
+    metrics tables that layout derived from the epoch's fetch log."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from mlscraper_spark.crawl.engine import _base_epoch, _snap_dir
+
+    last = last_complete_epoch(root)
+    log = read_fetch_log(spark, root).withColumns({
+        "url_hash": F.xxhash64("url_canon"),
+        "host_bucket": F.pmod(F.xxhash64("host"),
+                              F.lit(cfg.n_buckets)).cast("int"),
+    }).cache()
+    seen = log.select("url_canon", "url_hash", "host_bucket",
+                      F.col("epoch").alias("seen_epoch"))
+    base = _base_epoch(root, last, "seen_base_epoch")
+    assert base is not None
+    base_dir = os.path.join(_snap_dir(root, base), "url_seen_base")
+    old_base = seen.filter(F.col("seen_epoch") <= base)
+    assert ({r.url_canon for r in spark.read.parquet(base_dir).collect()}
+            == {r.url_canon for r in old_base.collect()})
+    old_base.write.mode("overwrite").parquet(base_dir)
+    for e in range(last + 1):
+        d = _snap_dir(root, e)
+        seen.filter(F.col("seen_epoch") == e).write.parquet(
+            os.path.join(d, "url_seen_delta"))
+        log.filter(F.col("epoch") == e).groupBy("host_bucket").agg(
+            F.count(F.lit(1)).alias("n_fetched"),
+            F.sum("n_links").alias("n_links"),
+            F.sum("n_images").alias("n_images"),
+        ).withColumn("epoch", F.lit(e)).write.parquet(os.path.join(d, "metrics"))
+    log.unpersist()
+    assert spark.read.parquet(base_dir).columns == [
+        c.split()[0] for c in OLD_SEEN_SCHEMA.split(", ")]
+
+
 def test_resume_across_ref_chain_and_compaction(spark, tmp_path):
     """Kill-and-resume while frontier refs span several snapshots AND
     both compactions fire mid-crawl (frontier rewrite at max_ref_span=2,
     url_seen base fold every 2 epochs): the resumed run must still equal
-    the oracle bit-for-bit (all state rebuilt purely from manifests)."""
+    the oracle bit-for-bit (all state rebuilt purely from manifests).
+    The killed root is first rewritten into the older URL-seen layout (a
+    four-column url_seen_base plus url_seen_delta and metrics tables), so
+    a root written before URL-seen was read from the fetch logs resumes
+    too."""
     import os
 
     from mlscraper_spark.crawl.engine import _base_epoch, _snap_dir
@@ -382,6 +501,7 @@ def test_resume_across_ref_chain_and_compaction(spark, tmp_path):
     root = str(tmp_path / "resume_refs")
     run_crawl(spark, root, seeds, web, cfg, max_epochs=3)  # "kill" at 3
     assert last_complete_epoch(root) == 2
+    _to_old_seen_layout(spark, root, cfg)
     run_crawl(spark, root, seeds, web, cfg, max_epochs=9)  # resume
     want = crawl_oracle(seeds, web, budget_per_host=2, max_epochs=9)
     assert _fetch_log_tuples(spark, root) == [

@@ -114,16 +114,37 @@ def test_text_anc_ids_equals_join_definition():
     """The parser's P2 precompute (r6) must equal the join-based
     definition it replaced: for every node, the ancestors (nearest first)
     whose stripped subtree text equals the node's — and it must be
-    opt-in (default parses skip the post-pass)."""
+    opt-in (default parses skip the post-pass).  Checked on a small page,
+    on every page of a synthetic web and on the quotes fixtures; the
+    parser stops at the first ancestor whose text differs, so these pages
+    must hold chains that end below the root."""
+    from mlscraper_spark.crawl.synthweb import WebConfig, fetch
+    from mlscraper_spark.fixtures import QUOTES_AUTHORS, quotes_author_page
+
     html = (
         b"<html><body><div><p>wrapped</p></div>"
         b"<section><span>a</span><span>b</span></section></body></html>"
     )
+    # a chain of three wrappers, whitespace between them, that ends below
+    # the root
+    deep = (b"<html><body><div> <section>\n<article> <p>deep</p> </article>"
+            b"</section> </div><span>x</span></body></html>")
+    web = WebConfig(n_hosts=6, max_pages_per_host=20, enable_aliases=True)
+    pages = [html, deep] + [quotes_author_page(a) for a in QUOTES_AUTHORS] + [
+        fetch(f"http://{web.host_name(i)}/page/{j}", web)[1]
+        for i in range(web.n_hosts) for j in range(web.n_pages(i))
+    ]
+    n_cut, longest = 0, 0
+    for page in pages:
+        recs = parse_html(page, text_ancestors=True)
+        by_id = {r.node_id: r for r in recs}
+        for r in recs:
+            expected = [a for a in r.ancestor_ids if by_id[a].text == r.text]
+            assert r.text_anc_ids == expected, (r.tag, r.node_id)
+            n_cut += 0 < len(expected) < len(r.ancestor_ids)
+            longest = max(longest, len(expected))
+    assert len(pages) > 50 and n_cut > len(pages) and longest == 3
     recs = parse_html(html, text_ancestors=True)
-    by_id = {r.node_id: r for r in recs}
-    for r in recs:
-        expected = [a for a in r.ancestor_ids if by_id[a].text == r.text]
-        assert r.text_anc_ids == expected, (r.tag, r.node_id)
     # the <p> promotes to its div wrapper (identical text); body/html
     # also contain the section's text, so promotion stops there
     p = next(r for r in recs if r.tag == "p")
