@@ -7,45 +7,26 @@ returns a JSON plan; extraction is a DataFrame transformation.
 """
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from mlscraper_spark.training.samples import Sample, SamplePage, TrainingSet
-from mlscraper_spark.training.samples import iter_string_values
 from mlscraper_spark.training.train import train_scraper as _train_local
 
 
 def train_scraper(pages_and_values: list[tuple[bytes | str, object]],
-                  complexity: int = 100,
-                  spark: SparkSession | None = None) -> dict:
+                  complexity: int = 100) -> dict:
     """Train a scraper plan from (html, expected_value) examples.
 
-    With ``spark`` given, the raw match scan (the only stage that touches
-    full page contents) runs as a distributed job over the exploded nodes
-    table (SURVEY.md §3.1).  Selector-uniqueness verification (J6) and the
-    combination search stay on the driver over the pruned match sets,
-    exactly as the reference's loop (training.py:62-77).
+    Training runs on the driver, as the reference's loop does
+    (training.py:36-78): each sample page is parsed once, the match scan
+    probes a per-page value index, and selector-uniqueness verification
+    (J6) and the combination search run over the pruned match sets.  Only
+    applying the plan (``scrape``) is a Spark job.
     """
-    sample_pages = [
-        SamplePage(f"sample-{i}", html) for i, (html, _) in enumerate(pages_and_values)
-    ]
     ts = TrainingSet()
-    for page, (_, value) in zip(sample_pages, pages_and_values):
-        ts.add_sample(Sample(page, value))
-
-    index = None
-    if spark is not None:
-        from mlscraper_spark.operators.matching import build_value_match_index
-
-        values = []
-        for _, value in pages_and_values:
-            values.extend(iter_string_values(value))
-        index = build_value_match_index(
-            spark,
-            [(p.page_key, hv[0] if isinstance(hv[0], bytes) else hv[0].encode())
-             for p, hv in zip(sample_pages, pages_and_values)],
-            values,
-        )
-    return _train_local(ts, complexity=complexity, value_match_index=index)
+    for i, (html, value) in enumerate(pages_and_values):
+        ts.add_sample(Sample(SamplePage(f"sample-{i}", html), value))
+    return _train_local(ts, complexity=complexity)
 
 
 def scrape(pages_df: DataFrame, plan: dict) -> DataFrame:

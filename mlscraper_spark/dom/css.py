@@ -282,6 +282,7 @@ class PageDOM:
         self.records = records
         self._selector_cache: dict[tuple[int, str], list[int]] = {}
         self._children: dict[int, list[int]] | None = None
+        self._value_index: tuple[dict, dict] | None = None
         # preorder => subtree of node i is the contiguous id range
         # (i, subtree_end[i]]; computed with one reverse scan over depths
         n = len(records)
@@ -307,6 +308,24 @@ class PageDOM:
                 ch.setdefault(r.parent_id, []).append(r.node_id)
             self._children = ch
         return self._children.get(parent_id, [])
+
+    def value_index(self) -> tuple[dict, dict]:
+        """``(texts, attrs)`` for the training match scan, built on first
+        use: each stripped own text → the ids of the nodes carrying it
+        (document order, each node once); each attribute value → its
+        ``(node_id, attr)`` pairs (document order, then attr name),
+        skipping 'class'/'rel', which never match."""
+        if self._value_index is None:
+            texts: dict[str, list[int]] = {}
+            attrs: dict[str, list[tuple[int, str]]] = {}
+            for r in self.records:
+                for t in dict.fromkeys(r.own_texts):
+                    texts.setdefault(t, []).append(r.node_id)
+                for a in sorted(r.attrs):
+                    if a not in ("class", "rel"):
+                        attrs.setdefault(r.attrs[a], []).append((r.node_id, a))
+            self._value_index = (texts, attrs)
+        return self._value_index
 
     def _siblings(self, rec: NodeRec) -> list[int]:
         return self.children_of(rec.parent_id)

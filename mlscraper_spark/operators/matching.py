@@ -1,4 +1,8 @@
-"""P1–P4 — the distributed match scan over the ``nodes`` table.
+"""P1–P4 — the distributed match scan over the ``nodes`` table (q24).
+
+Training does not use it: its scan runs on the driver over the parsed
+sample pages (``training/matches.py::scan_value_matches``); the two scans
+are tested for agreement.
 
 Relational re-expression of ``Node.find_all``
 (``/root/reference/mlscraper/html.py:84-104``) + the dimensions filter
@@ -16,14 +20,14 @@ Relational re-expression of ``Node.find_all``
   list-vs-str (never equal).
 * P4 dimensions filter: drop width/height attribute hits (samples.py:37).
 
-Scale notes: the values side is tiny (sample leaves) and is broadcast; P2
+Scale notes: the values side is tiny and is broadcast; P2
 needs no join at all — the parser computes ``text_anc_ids`` where each
 page's DOM is local, so the ancestor branch is a per-row explode; filters
 push to the parquet scan of nodes.
 """
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # sort-key components reproducing the reference generation order
@@ -36,7 +40,7 @@ def scan_matches(nodes_df: DataFrame, values_df: DataFrame,
                  drop_dimensions: bool = True) -> DataFrame:
     """Return matches of each value over the nodes table.
 
-    ``values_df``: single column ``value`` (distinct sample string leaves).
+    ``values_df``: single column ``value`` (the strings to find).
     Output: page_id, value, node_id, extractor_kind ('text'|'attr'),
     extractor_attr, sort_key (array<int>; reference generation order).
     """
@@ -46,14 +50,12 @@ def scan_matches(nodes_df: DataFrame, values_df: DataFrame,
     # ``direct``, attribute matches); uncached, each branch re-runs the
     # whole upstream pipeline — for exploded HTML pages that is the Arrow
     # parse stage executed per branch (guide §4: the Python boundary is
-    # the expensive part; pay it once).  ``direct`` is likewise read by
-    # both the text branch and the ancestor explode.  Both caches are
-    # scoped: released at the next query entry / bench leg via
-    # release_caches().
+    # the expensive part; pay it once).  Scoped: released at the next
+    # query entry / bench leg via release_caches().  The values side and
+    # ``direct`` stay uncached: both are cheap to recompute from here,
+    # and caching them cost two jobs in q24 and saved nothing.
     nodes_df = scoped_cache(nodes_df)
-    # the distinct values side feeds all three branch joins; cached so its
-    # exchange runs once instead of once per branch
-    v = F.broadcast(scoped_cache(values_df.select("value").distinct()))
+    v = F.broadcast(values_df.select("value").distinct())
 
     # NO dropDuplicates here (removed r6): a node whose own_texts carries
     # the same value twice yields duplicate rows, but every duplicate has
@@ -61,13 +63,10 @@ def scan_matches(nodes_df: DataFrame, values_df: DataFrame,
     # the dedup exchange + sort-aggregate pair per consuming branch bought
     # nothing (guide §2.4: remove shuffles whose work a later stage
     # already does).
-    direct = scoped_cache(
-        nodes_df.select(
-            "page_id", "node_id", "text_anc_ids",
-            F.explode("own_texts").alias("own_text"),
-        )
-        .join(v, F.col("own_text") == F.col("value"))
-    )
+    direct = nodes_df.select(
+        "page_id", "node_id", "text_anc_ids",
+        F.explode("own_texts").alias("own_text"),
+    ).join(v, F.col("own_text") == F.col("value"))
 
     text_matches = direct.select(
         "page_id",
@@ -134,41 +133,3 @@ def scan_matches(nodes_df: DataFrame, values_df: DataFrame,
     return out.groupBy(
         "page_id", "value", "node_id", "extractor_kind", "extractor_attr"
     ).agg(F.min("sort_key").alias("sort_key"))
-
-
-def build_value_match_index(spark: SparkSession, pages: list[tuple[str, bytes]],
-                            values: list[str]) -> dict:
-    """Run the distributed scan for training (SURVEY.md §3.1 stage 1) and
-    collect the result to the driver as
-    {(page_key, value): [(node_id, extractor_tuple), ...]} in reference
-    generation order.  The collect is unbounded by design: the reference
-    keeps every raw match at this stage too (samples.py:29-48) — pruning
-    happens later, span-ranked, at T1 (training.py:48-51); bounding here
-    would change which combinations exist and break golden parity.  The
-    result is small in practice because training inputs are a handful of
-    sample pages."""
-    from mlscraper_spark.operators.explode import explode_pages
-
-    pages_df = spark.createDataFrame(
-        [(k, bytearray(h) if isinstance(h, bytes) else h) for k, h in pages],
-        "page_id string, html binary",
-    )
-    nodes_df = explode_pages(pages_df)
-    values_df = spark.createDataFrame([(s,) for s in set(values)], "value string")
-    rows = (
-        scan_matches(nodes_df, values_df, drop_dimensions=False)
-        # extractor_attr as final tiebreak: two attrs of one node carrying
-        # the same value share a sort_key; both paths order by attr name
-        .sort("page_id", "value", "sort_key", "extractor_attr")
-        .collect()
-    )
-    index: dict = {}
-    for r in rows:
-        ext = ("text",) if r.extractor_kind == "text" else ("attr", r.extractor_attr)
-        index.setdefault((r.page_id, r.value), []).append((r.node_id, ext))
-    # pages×values with no hits must exist as empty lists so the trainer
-    # raises NoMatchFoundException instead of falling back to a local scan
-    for k, _ in pages:
-        for val in values:
-            index.setdefault((k, val), [])
-    return index

@@ -1,12 +1,12 @@
 """Match algebra: occurrences of sample values in a DOM.
 
 Re-expression of ``/root/reference/mlscraper/matches.py`` over flat node
-records.  This layer runs on the *driver* over the already-pruned match sets
-(reference keeps ≤100 per sample, ``training.py:48-51``) — the heavy scan
-that *finds* raw matches is the distributed operator in
-``mlscraper_spark/operators/matching.py``; this module only combines and
-scores them.  Page identity is a ``page_key`` string; node identity is the
-preorder ``node_id`` (replaces soup-pointer interning, ``html.py:204-207``).
+records.  This layer runs on the *driver*: ``scan_value_matches`` finds the
+raw matches of a sample value on a sample page, and the rest combines and
+scores the pruned match sets (reference keeps ≤100 per sample,
+``training.py:48-51``).  Page identity is a ``page_key`` string; node
+identity is the preorder ``node_id`` (replaces soup-pointer interning,
+``html.py:204-207``).
 """
 from __future__ import annotations
 
@@ -257,25 +257,20 @@ def scan_value_matches(page_key: str, dom: PageDOM, value: str) -> list[ValueMat
         (html.py:100-104); 'class'/'rel' excluded (bs4 multi-valued attrs
         compare list-vs-str, never equal).
 
-    The distributed form of this scan lives in operators/matching.py; both
-    are tested for agreement.
+    Hits are probed in the page's value index (``PageDOM.value_index``):
+    text hits in document order, each followed by its equal-text ancestors
+    nearest first, then attribute hits in document order and attr name —
+    an order q24's distributed scan (operators/matching.py) can observe
+    through a MapType column; both scans are tested for agreement.
     """
+    texts, attrs = dom.value_index()
     out: list[ValueMatch] = []
-    for rec in dom.records:
-        if value in rec.own_texts:
-            out.append(ValueMatch(page_key, dom, rec.node_id, TEXT_EXTRACTOR))
-            for aid in rec.ancestor_ids:
-                if dom.node(aid).text == rec.text:
-                    out.append(ValueMatch(page_key, dom, aid, TEXT_EXTRACTOR))
-    for rec in dom.records:
-        # sorted by attr name: the reference relies on dict (document) attr
-        # order, which the distributed scan cannot observe through a
-        # MapType column — both paths pin the same deterministic order
-        for attr in sorted(rec.attrs):
-            if attr in ("class", "rel"):
-                continue
-            if rec.attrs[attr] == value:
-                out.append(
-                    ValueMatch(page_key, dom, rec.node_id, attr_extractor(attr))
-                )
+    for nid in texts.get(value, ()):
+        rec = dom.node(nid)
+        out.append(ValueMatch(page_key, dom, nid, TEXT_EXTRACTOR))
+        for aid in rec.ancestor_ids:
+            if dom.node(aid).text == rec.text:
+                out.append(ValueMatch(page_key, dom, aid, TEXT_EXTRACTOR))
+    for nid, attr in attrs.get(value, ()):
+        out.append(ValueMatch(page_key, dom, nid, attr_extractor(attr)))
     return out

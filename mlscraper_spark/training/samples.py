@@ -4,10 +4,9 @@ Re-expression of ``/root/reference/mlscraper/samples.py``.  A sample is
 (page, value) where value is str | list | dict recursively — strings-only
 leaves (``samples.py:32``, asserted at ``html.py:85``).  Schema is induced
 from the first sample and type-checked on later ones
-(``samples.py:102-113``, ``:132-170``).  All of this is driver-side: sample
-counts are tiny by construction; the per-page match *scan* it triggers is
-the distributed operator in operators/matching.py when a SparkSession is
-supplied to the trainer.
+(``samples.py:102-113``, ``:132-170``).  All of this is driver-side, the
+per-page match scan included: sample counts are tiny by construction, and
+each sample page is parsed once, by ``SamplePage``.
 """
 from __future__ import annotations
 
@@ -18,7 +17,6 @@ from mlscraper_spark.dom.parser import parse_html
 from mlscraper_spark.training.matches import (
     DictMatch,
     ListMatch,
-    ValueMatch,
     is_dimensions_match,
     is_disjoint_match_combination,
     scan_value_matches,
@@ -54,26 +52,13 @@ class Sample:
     def __repr__(self):
         return f"<Sample {self.page!r} {self.value!r}>"
 
-    def get_matches(self, value_match_index: dict | None = None):
+    def get_matches(self):
         """samples.py:29-75 — raw value matches for str; cross products with
-        disjointness filtering for list/dict.
-
-        ``value_match_index`` optionally maps (page_key, value) -> list of
-        (node_id, extractor) precomputed by the distributed scan
-        (operators/matching.py), mirroring the Spark re-architecture in
-        SURVEY.md §3.1; falls back to the local scan when absent.
-        """
+        disjointness filtering for list/dict."""
         if isinstance(self.value, str):
-            key = (self.page.page_key, self.value)
-            if value_match_index is not None and key in value_match_index:
-                value_matches = [
-                    ValueMatch(self.page.page_key, self.page.dom, nid, ext)
-                    for nid, ext in value_match_index[key]
-                ]
-            else:
-                value_matches = scan_value_matches(
-                    self.page.page_key, self.page.dom, self.value
-                )
+            value_matches = scan_value_matches(
+                self.page.page_key, self.page.dom, self.value
+            )
             # filter out dimensions like width/height (samples.py:37)
             value_matches = [m for m in value_matches if not is_dimensions_match(m)]
             if not value_matches:
@@ -83,10 +68,7 @@ class Sample:
             return value_matches
 
         if isinstance(self.value, list):
-            matches_by_value = [
-                Sample(self.page, v).get_matches(value_match_index)
-                for v in self.value
-            ]
+            matches_by_value = [Sample(self.page, v).get_matches() for v in self.value]
             return [
                 ListMatch(self.page.page_key, self.page.dom, tuple(combi))
                 for combi in product(*matches_by_value)
@@ -95,8 +77,7 @@ class Sample:
 
         if isinstance(self.value, dict):
             matches_by_key = {
-                k: Sample(self.page, v).get_matches(value_match_index)
-                for k, v in self.value.items()
+                k: Sample(self.page, v).get_matches() for k, v in self.value.items()
             }
             return [
                 DictMatch(
@@ -109,20 +90,6 @@ class Sample:
             ]
 
         raise RuntimeError(f"unsupported value: {self.value!r}")
-
-
-def iter_string_values(value):
-    """All string leaves of a sample value (for the distributed scan)."""
-    if isinstance(value, str):
-        yield value
-    elif isinstance(value, list):
-        for v in value:
-            yield from iter_string_values(v)
-    elif isinstance(value, dict):
-        for v in value.values():
-            yield from iter_string_values(v)
-    else:
-        raise ItemStructureException(f"unsupported value: {value!r}")
 
 
 class Item:

@@ -2,10 +2,8 @@
 
 Re-expression of ``/root/reference/mlscraper/training.py``.  The search loop
 runs on the driver over the pruned match space (top-100 by span per sample,
-``training.py:48-51``); the raw match scan can be delegated to Spark via
-``value_match_index`` (see operators/matching.py and SURVEY.md §3.1: the
-driver↔executor boundary sits between the scan job and the combination
-search).
+``training.py:48-51``), as does the raw match scan that feeds it
+(``Sample.get_matches``, one value-index probe per sample value).
 """
 from __future__ import annotations
 
@@ -51,14 +49,11 @@ def get_match_combination_priority(matches) -> float:
     return mean(m1.similarity_to(m2) for m1, m2 in combinations(matches, 2))
 
 
-def train_scraper(training_set: TrainingSet, complexity: int = 100,
-                  value_match_index: dict | None = None) -> dict:
+def train_scraper(training_set: TrainingSet, complexity: int = 100) -> dict:
     """training.py:36-78 — returns a scraper *plan* (scrapers.py grammar)."""
     samples = training_set.item.samples
     sample_matches = [
-        sorted(s.get_matches(value_match_index), key=lambda m: m.span)[
-            :TOP_MATCHES_PER_SAMPLE
-        ]
+        sorted(s.get_matches(), key=lambda m: m.span)[:TOP_MATCHES_PER_SAMPLE]
         for s in samples
     ]
     match_combinations = list(product(*sample_matches))

@@ -65,6 +65,49 @@ GITHUB_PROFILES = {
 }
 
 
+# one page for the match scans' edge cases: a value repeated in one node's
+# own texts (<p>), an equal-text wrapper chain (section, div) that ends
+# below the root, and attribute hits on class, rel, width and href
+CRAFTED_SCAN_PAGE = (
+    b'<html><body><div class="v" rel="v"> <section>\n<p>v<br>v</p> </section></div>'
+    b'<a href="v" rel="v" class="v k">link</a><img width="v" src="v"></body></html>'
+)
+
+
+def scan_corpus(name: str) -> list[tuple[str, bytes]]:
+    """(page_key, html) pages the match scans are checked over: ``quotes``
+    (the three quotes pages), ``synthweb`` (every page of a 6-host
+    synthetic web), ``crafted`` (``CRAFTED_SCAN_PAGE``), ``inrepo`` (the
+    in-repo stackoverflow and github pages) and ``reference`` (the
+    reference's so.html; skips where it is absent)."""
+    from mlscraper_spark import fixtures as fx
+    from mlscraper_spark.crawl.synthweb import WebConfig, fetch
+
+    if name == "quotes":
+        return [(a, fx.quotes_author_page(a)) for a in fx.QUOTES_AUTHORS]
+    if name == "synthweb":
+        web = WebConfig(n_hosts=6, max_pages_per_host=20, enable_aliases=True)
+        return [(f"{i}/{j}", fetch(f"http://{web.host_name(i)}/page/{j}", web)[1])
+                for i in range(web.n_hosts) for j in range(web.n_pages(i))]
+    if name == "crafted":
+        return [("crafted", CRAFTED_SCAN_PAGE)]
+    if name == "inrepo":
+        return [("so", fx.stackoverflow_answer_page(SO_ITEM))] + [
+            (login, fx.github_profile_page(p)) for login, p in GITHUB_PROFILES.items()]
+    assert name == "reference", name
+    return [("so", reference_fixture("so.html"))]
+
+
+SCAN_CORPORA = ["quotes", "synthweb", "crafted", "inrepo", "reference"]
+
+
+def page_values(records) -> list[str]:
+    """Every own text and every attribute value of a parsed page, once
+    each, in document order."""
+    return list(dict.fromkeys(
+        v for r in records for v in [*r.own_texts, *r.attrs.values()]))
+
+
 def job_labels(spark, fn):
     """``(fn(), labels of the Spark jobs submitted while it ran)``, found
     by diffing job ids in the driver status store: the crawl's snapshot

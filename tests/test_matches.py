@@ -1,5 +1,7 @@
 """Match-scan + extractor semantics, ported from the reference's
 tests/test_html.py (find_all cases) and tests/test_matches.py."""
+import pytest
+
 from mlscraper_spark.dom.css import PageDOM
 from mlscraper_spark.dom.parser import parse_html
 from mlscraper_spark.training.matches import (
@@ -11,6 +13,7 @@ from mlscraper_spark.training.matches import (
     is_dimensions_match,
     scan_value_matches,
 )
+from tests.conftest import CRAFTED_SCAN_PAGE, SCAN_CORPORA, page_values, scan_corpus
 
 
 def _dom(html):
@@ -87,3 +90,53 @@ def test_similarity_prefers_same_structure():
     d = dom.select(PAGE_ROOT, "div")[0]
     assert node_similarity(dom, p1, dom, p2) == 1.0
     assert node_similarity(dom, p1, dom, d) == 0.0  # tag mismatch
+
+
+def _nested_loop_scan(dom, value):
+    """The match scan's definition, one pass over the page per value:
+    text hits in document order, each followed by its equal-text
+    ancestors nearest first, then attribute hits in document order and
+    attr name ('class'/'rel' never match)."""
+    out = []
+    for rec in dom.records:
+        if value in rec.own_texts:
+            out.append((rec.node_id, TEXT_EXTRACTOR))
+            for aid in rec.ancestor_ids:
+                if dom.node(aid).text == rec.text:
+                    out.append((aid, TEXT_EXTRACTOR))
+    for rec in dom.records:
+        for attr in sorted(rec.attrs):
+            if attr not in ("class", "rel") and rec.attrs[attr] == value:
+                out.append((rec.node_id, attr_extractor(attr)))
+    return out
+
+
+@pytest.mark.parametrize("corpus", SCAN_CORPORA)
+def test_indexed_scan_equals_nested_loop(corpus):
+    """``scan_value_matches`` probes the page's value index; its output
+    must equal the nested-loop definition, in the same order, for every
+    own text and attribute value of every page of the corpus."""
+    n_values = n_hits = 0
+    for key, html in scan_corpus(corpus):
+        dom = _dom(html)
+        for v in page_values(dom.records):
+            got = [(m.node_id, m.extractor) for m in scan_value_matches(key, dom, v)]
+            assert got == _nested_loop_scan(dom, v), (key, v)
+            n_values += 1
+            n_hits += len(got)
+    assert n_values and n_hits
+
+
+def test_indexed_scan_edge_cases():
+    dom = _dom(CRAFTED_SCAN_PAGE)
+    got = [(dom.node(m.node_id).tag, m.extractor)
+           for m in scan_value_matches("c", dom, "v")]
+    # <p> once although its own texts repeat "v"; its wrapper chain stops
+    # below <body>; class/rel never match, width does (the dimensions
+    # filter is Sample.get_matches's job), then href and src
+    assert got == [
+        ("p", TEXT_EXTRACTOR), ("section", TEXT_EXTRACTOR), ("div", TEXT_EXTRACTOR),
+        ("a", attr_extractor("href")),
+        ("img", attr_extractor("src")), ("img", attr_extractor("width")),
+    ]
+    assert scan_value_matches("c", dom, "v k") == []

@@ -183,3 +183,19 @@ def test_thumbnail_pipeline_has_no_shuffle(spark, sf):
     plan = _plan(spark, sf, Q.q36_image_thumbnails)
     assert "Exchange hashpartitioning" not in plan, plan
     assert "Exchange rangepartitioning" not in plan, plan
+
+
+def test_q24_job_count(spark, sf):
+    """q24 caches only the parsed nodes, which both of its branches read;
+    the values side and the direct text hits are recomputed, as caching
+    them costs a materializing job each and saves nothing."""
+    from mlscraper_spark.caches import release_caches
+    from tests.conftest import jobs_submitted
+
+    try:
+        rows, n_jobs = jobs_submitted(
+            spark, lambda: Q.q24_match_scan(spark, sf).collect())
+    finally:
+        release_caches()
+    assert rows and all(r.n_matches == 1 for r in rows)
+    assert n_jobs == 9, n_jobs

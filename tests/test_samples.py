@@ -5,6 +5,7 @@ import pytest
 from mlscraper_spark.training.matches import DictMatch, ListMatch
 from mlscraper_spark.training.samples import (
     ItemStructureException,
+    NoMatchFoundException,
     Sample,
     SamplePage,
     make_training_set,
@@ -66,3 +67,14 @@ def test_get_matches_list_of_dicts():
     assert isinstance(match, ListMatch)
     assert len(match.matches) == 2
     assert all(isinstance(m, DictMatch) for m in match.matches)
+
+
+def test_get_matches_missing_value_raises():
+    """A value the page's value index holds nowhere — not as an own text,
+    not as an attribute value — has no match; so has one only held by
+    'class' or a dimension attribute."""
+    page = SamplePage("p", b'<html><body><p class="x">a</p><img width="9"></body></html>')
+    for value in ["zzz", "x", "9", ["a", "zzz"], {"k": "zzz"}]:
+        with pytest.raises(NoMatchFoundException):
+            Sample(page, value).get_matches()
+    assert len(Sample(page, "a").get_matches()) == 3  # p, body, html

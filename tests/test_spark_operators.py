@@ -1,5 +1,6 @@
-"""Distributed operators: explode, match scan (vs local scan), extraction,
-and Spark-backed training (SURVEY.md §3.1/§3.2 architecture)."""
+"""Distributed operators: explode, match scan (vs the driver scan) and
+extraction, including a driver-trained plan applied as a Spark job
+(SURVEY.md §3.2 architecture)."""
 import json
 
 import pytest
@@ -7,12 +8,18 @@ from pyspark.sql import functions as F
 
 from mlscraper_spark.dom.css import PageDOM
 from mlscraper_spark.dom.parser import parse_html
-from mlscraper_spark.fixtures import quotes_author_page
+from mlscraper_spark.fixtures import quotes_author_page, stackoverflow_answer_page
 from mlscraper_spark.operators.explode import explode_pages
 from mlscraper_spark.operators.extract import extract_list_items, extract_with_plan
-from mlscraper_spark.operators.matching import build_value_match_index, scan_matches
+from mlscraper_spark.operators.matching import scan_matches
 from mlscraper_spark.training.matches import scan_value_matches
-from tests.conftest import SO_ITEM, jobs_submitted, reference_fixture
+from tests.conftest import (
+    SCAN_CORPORA,
+    SO_ITEM,
+    page_values,
+    reference_fixture,
+    scan_corpus,
+)
 
 
 def _pages_df(spark, pages):
@@ -35,24 +42,29 @@ def test_explode_pages(spark):
     assert by_tag["div"].node_id in p.ancestor_ids
 
 
-def test_scan_matches_agrees_with_local(spark):
-    """The distributed scan and the driver-side scan must be one semantics."""
-    html = reference_fixture("so.html")
-    values = ["/users/624900/jterrace", "20", "2011-06-16 19:45:11Z"]
-    nodes = explode_pages(_pages_df(spark, [("so", html)]))
+@pytest.mark.parametrize("corpus", SCAN_CORPORA)
+def test_scan_matches_agrees_with_local(spark, corpus):
+    """The distributed scan (q24) and the driver-side training scan must be
+    one semantics: for every own text and attribute value of any page of
+    the corpus, searched on every page, the same hits in the same order."""
+    pages = scan_corpus(corpus)
+    doms = {k: PageDOM(parse_html(h)) for k, h in pages}
+    values = list(dict.fromkeys(v for d in doms.values() for v in page_values(d.records)))
     values_df = spark.createDataFrame([(v,) for v in values], "value string")
-    got = {
-        (r.value, r.node_id, r.extractor_kind, r.extractor_attr)
-        for r in scan_matches(nodes, values_df, drop_dimensions=False).collect()
-    }
-    dom = PageDOM(parse_html(html))
-    want = set()
-    for v in values:
-        for m in scan_value_matches("so", dom, v):
-            kind = m.extractor[0]
-            attr = m.extractor[1] if kind == "attr" else None
-            want.add((v, m.node_id, kind, attr))
-    assert got == want
+    got: dict = {}
+    rows = (scan_matches(explode_pages(_pages_df(spark, pages)), values_df,
+                         drop_dimensions=False)
+            .sort("page_id", "value", "sort_key", "extractor_attr").collect())
+    for r in rows:
+        ext = ("text",) if r.extractor_kind == "text" else ("attr", r.extractor_attr)
+        got.setdefault((r.page_id, r.value), []).append((r.node_id, ext))
+    want = {}
+    for k, dom in doms.items():
+        for v in values:
+            hits = [(m.node_id, m.extractor) for m in scan_value_matches(k, dom, v)]
+            if hits:
+                want[(k, v)] = hits
+    assert want and got == want
 
 
 def test_scan_matches_dimensions_filter(spark):
@@ -80,7 +92,8 @@ def test_extract_with_plan_distributed(spark):
     assert len(got) == 3
 
 
-def test_extract_list_items_stackoverflow(spark):
+@pytest.mark.parametrize("source", ["inrepo", "reference"])
+def test_extract_list_items_stackoverflow(spark, source):
     from mlscraper_spark.training.scrapers import (
         css_selector,
         dict_plan,
@@ -103,56 +116,27 @@ def test_extract_list_items_stackoverflow(spark):
             }
         ),
     )
-    df = extract_list_items(_pages_df(spark, [("so", reference_fixture("so.html"))]), plan)
+    html = (stackoverflow_answer_page(SO_ITEM) if source == "inrepo"
+            else reference_fixture("so.html"))
+    df = extract_list_items(_pages_df(spark, [("so", html)]), plan)
     items = [json.loads(r.item_json) for r in df.sort("item_index").collect()]
     assert items == SO_ITEM
 
 
-def test_train_scraper_spark_end_to_end(spark):
-    """Quotes golden with the match scan running as a Spark job."""
+def test_train_on_driver_scrape_distributed(spark):
+    """The quotes example end to end: the plan is trained on the driver
+    and applied by the distributed ``scrape`` to every author page."""
     from mlscraper_spark.api import scrape, train_scraper
+    from mlscraper_spark.fixtures import QUOTES_AUTHORS
 
     plan = train_scraper(
         [(quotes_author_page("einstein"),
-          {"name": "Albert Einstein", "born": "March 14, 1879"})],
-        spark=spark,
-    )
-    result = scrape(_pages_df(spark, [("rowling", quotes_author_page("rowling"))]), plan)
-    value = json.loads(result.collect()[0].value_json)
-    assert value == {"name": "J.K. Rowling", "born": "July 31, 1965"}
-
-
-def test_train_scraper_spark_job_budget(spark):
-    """Quotes training with ``spark`` trains the driver-side plan and
-    submits at most 11 Spark jobs: the distributed match scan is the
-    only Spark work, selector-uniqueness verification stays inline."""
-    from mlscraper_spark.api import train_scraper
-
-    examples = [(quotes_author_page("einstein"),
-                 {"name": "Albert Einstein", "born": "March 14, 1879"})]
-    plan, n_jobs = jobs_submitted(
-        spark, lambda: train_scraper(examples, spark=spark))
-    assert plan == train_scraper(examples)
-    assert n_jobs <= 11, n_jobs
-
-
-def test_stackoverflow_golden_with_spark_scan(spark):
-    """The SO golden (test_training.py:84-95) with the match scan running
-    distributed: same plan shape + round-trip as the driver-side scan."""
-    import mlscraper_spark.api as api
-    from mlscraper_spark.training.scrapers import apply_plan_to_html
-
-    html = reference_fixture("so.html")
-    plan = api.train_scraper([(html, SO_ITEM)], complexity=2, spark=spark)
-    assert plan["type"] == "list"
-    assert apply_plan_to_html(html, plan) == SO_ITEM
-
-
-def test_value_match_index_empty_for_missing(spark):
-    idx = build_value_match_index(
-        spark, [("p", b"<html><body><p>a</p></body></html>")], ["zzz"]
-    )
-    assert idx[("p", "zzz")] == []
+          {"name": "Albert Einstein", "born": "March 14, 1879"})])
+    pages = [(a, quotes_author_page(a)) for a in QUOTES_AUTHORS]
+    got = {r.page_id: json.loads(r.value_json)
+           for r in scrape(_pages_df(spark, pages), plan).collect()}
+    assert got == {a: {"name": v["name"], "born": v["born"]}
+                   for a, v in QUOTES_AUTHORS.items()}
 
 
 def test_dedup_clusters_chain_collapses_to_one_survivor(spark):

@@ -1,7 +1,12 @@
 """The reference's end-to-end training goldens, ported from
 /root/reference/tests/test_training.py (all five) plus the offline quotes
-example (tests/test_examples.py:8-18)."""
-from mlscraper_spark.fixtures import quotes_author_page
+example (tests/test_examples.py:8-18).  The stackoverflow and github
+goldens also run over in-repo pages of the same structure."""
+from mlscraper_spark.fixtures import (
+    github_profile_page,
+    quotes_author_page,
+    stackoverflow_answer_page,
+)
 from mlscraper_spark.training.matches import PAGE_ROOT
 from mlscraper_spark.training.samples import Sample, SamplePage, TrainingSet
 from mlscraper_spark.training.scrapers import apply_plan, apply_plan_to_html
@@ -70,6 +75,25 @@ def test_train_scraper_github():
     ]
     plan = _train(pv, complexity=2)
     target = reference_fixture("github/jonashaag.html")
+    assert apply_plan_to_html(target, plan) == GITHUB_PROFILES["jonashaag"]
+
+
+def test_train_scraper_stackoverflow_inrepo():
+    # the stackoverflow golden over the in-repo page: the question carries
+    # the answers' vote, user and time markup, so the list selector must
+    # tell them apart
+    html = stackoverflow_answer_page(SO_ITEM)
+    plan = _train([(html, SO_ITEM)], complexity=2)
+    assert plan["type"] == "list"
+    assert apply_plan_to_html(html, plan) == SO_ITEM
+
+
+def test_train_scraper_github_inrepo():
+    # the github golden over in-repo profile pages
+    pv = [(github_profile_page(GITHUB_PROFILES[login]), GITHUB_PROFILES[login])
+          for login in ["lorey", "siboehm"]]
+    plan = _train(pv, complexity=2)
+    target = github_profile_page(GITHUB_PROFILES["jonashaag"])
     assert apply_plan_to_html(target, plan) == GITHUB_PROFILES["jonashaag"]
 
 
