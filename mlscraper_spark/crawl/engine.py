@@ -7,10 +7,12 @@ bit-for-bit on fetch order and the final URL-seen set.
 
 Design (SURVEY.md §7.4), round-2 architecture:
 
-* **State lives in epoch snapshots on disk** behind the ``TableFormat``
-  seam (``mlscraper_spark/tables.py``: Iceberg when the runtime jar is
-  present, parquet dirs + JSON manifest otherwise).  Each epoch reads only
-  the previous snapshot, so kill-and-resume is free and exact (tested).
+* **State lives in epoch snapshots** behind the ``TableFormat`` seam
+  (``mlscraper_spark/tables.py``: Iceberg when the runtime jar is
+  present, parquet dirs otherwise), which also reads and commits each
+  snapshot's JSON manifest; the root may be any Hadoop path.  Each epoch
+  reads only the previous snapshot, so kill-and-resume is free and exact
+  (tested).
 * **Frontier is a bucket-manifested table**: rows are bucketed by
   ``host_bucket``; the epoch manifest maps each bucket to the snapshot
   that last rewrote it (``frontier_refs``).  An epoch rewrites ONLY the
@@ -62,7 +64,7 @@ from pyspark.sql import types as T
 from mlscraper_spark.crawl.fetchers import SynthWebAdapter
 from mlscraper_spark.crawl.synthweb import WebConfig
 from mlscraper_spark.streaming.pipeline import crawl_monitor
-from mlscraper_spark.tables import get_table_format
+from mlscraper_spark.tables import expand_glob, get_table_format
 
 FRONTIER_SCHEMA = (
     "url_canon string, url_hash long, host string, host_bucket int, "
@@ -140,44 +142,36 @@ def _manifest_path(root: str, epoch: int) -> str:
 _SNAP_RE = re.compile(r"^snap_(\d{5})$")
 
 
-def _check_local_root(root: str) -> None:
-    """Manifests go through ``open`` and parquet tables are probed with
-    ``os.path.isdir``: on a URI root every optional table reads as absent."""
-    if re.match(r"[A-Za-z][A-Za-z0-9+.-]*:", root):
-        raise ValueError(f"crawl root must be a local path, not a URI: {root!r}")
-
-
 def last_complete_epoch(root: str) -> int | None:
-    """Largest epoch with a complete snapshot, or None (no seed yet).
+    """Largest epoch with a committed manifest, or None (no seed yet),
+    listed through the Hadoop filesystem of the active session.
 
     Only strictly-conforming ``snap_NNNNN`` names count — stray entries
     (``snap_tmp``, editor leftovers) are skipped, not a resume-breaking
     ValueError."""
-    best = None
-    if not os.path.isdir(root):
-        return None
-    for name in os.listdir(root):
-        m = _SNAP_RE.match(name)
-        if m:
-            e = int(m.group(1)) - 1
-            if os.path.exists(_manifest_path(root, e)):
-                best = e if best is None else max(best, e)
-    return best
+    spark = SparkSession.active()
+    epochs = [
+        int(m.group(1)) - 1
+        for p in expand_glob(spark, os.path.join(root, "snap_*", "_manifest.json"))
+        if (m := _SNAP_RE.match(p.rsplit("/", 2)[-2]))
+    ]
+    return max(epochs, default=None)
 
 
-def _read_manifest(root: str, epoch: int) -> dict:
-    with open(_manifest_path(root, epoch)) as f:
-        return json.load(f)
+def _read_manifest(spark: SparkSession, root: str, epoch: int) -> dict:
+    return get_table_format(spark).read_manifest(
+        spark, _manifest_path(root, epoch))
 
 
-def _frontier_refs(root: str, epoch: int) -> dict[int, int]:
+def _frontier_refs(spark: SparkSession, root: str,
+                   epoch: int) -> dict[int, int]:
     """bucket → epoch whose snapshot's frontier table holds its rows.
 
     A manifest WITHOUT the key predates the bucket-manifest format; fail
     loudly rather than read an empty frontier and silently report the
     crawl finished (an empty dict, by contrast, is a legitimately empty
     frontier)."""
-    m = _read_manifest(root, epoch)
+    m = _read_manifest(spark, root, epoch)
     if "frontier_refs" not in m:
         raise RuntimeError(
             f"snapshot {_snap_dir(root, epoch)} predates the bucket-manifest "
@@ -216,7 +210,7 @@ def read_frontier(spark: SparkSession, root: str, epoch: int,
     bucket.  A referenced frontier table is read without an existence
     probe: a missing one means a corrupt root, and the read fails."""
     fmt = get_table_format(spark)
-    refs = _frontier_refs(root, epoch)
+    refs = _frontier_refs(spark, root, epoch)
     if buckets is not None:
         keep = set(buckets)
         refs = {b: e for b, e in refs.items() if b in keep}
@@ -490,8 +484,7 @@ def _commit_snapshot(spark: SparkSession, root: str, epoch: int,
         futs = [pool.submit(write, df, name) for df, name in writes]
         for fut in futs:
             fut.result()  # propagate failures before the manifest exists
-    with open(_manifest_path(root, epoch), "w") as f:
-        json.dump(manifest, f)
+    fmt.commit_manifest(spark, _manifest_path(root, epoch), manifest)
 
 
 def _discover(spark: SparkSession, rows: DataFrame, epoch: int,
@@ -555,7 +548,6 @@ def seed_crawl(spark: SparkSession, root: str, seeds, web: WebConfig,
     distributedly, never materialized on the driver.  A driver list is
     embedded into every task binary — ~8 MB at 1.2M seeds, a
     cores-independent cost the N-vs-4N ladder measures directly)."""
-    _check_local_root(root)
     adapter = fetch_adapter or SynthWebAdapter(web)
     if isinstance(seeds, DataFrame):
         raw = seeds.select(F.col(seeds.columns[0]).cast("string").alias("raw"))
@@ -848,9 +840,9 @@ def _assign_global_seq(spark: SparkSession, df: DataFrame) -> tuple[DataFrame, i
 # ---------------------------------------------------------------------------
 
 
-def _fetch_udf(web: WebConfig, fetch_adapter=None,
-               scraper_plan: dict | None = None, emit_images: bool = False):
-    """Arrow fetch stage.  ``fetch_adapter`` (crawl/fetchers.FetchAdapter)
+def _fetch_udf(adapter, scraper_plan: dict | None = None,
+               emit_images: bool = False):
+    """Arrow fetch stage.  ``adapter`` (crawl/fetchers.FetchAdapter)
     makes the transport injectable — the synthetic web by default, an
     HttpFetchAdapter for real deployments — without touching the epoch
     loop; the adapter is pickled into the python workers.
@@ -886,11 +878,9 @@ def _fetch_udf(web: WebConfig, fetch_adapter=None,
     out_schema = T.StructType(fields)
 
     def _fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from mlscraper_spark.crawl.fetchers import SynthWebAdapter
         from mlscraper_spark.crawl.urlnorm import content_fp
         from mlscraper_spark.operators.extract import page_payload
 
-        adapter = fetch_adapter or SynthWebAdapter(web)
         for pdf in batches:
             rows = []
             for url, host, hb, seq, depth in zip(
@@ -1088,9 +1078,10 @@ def _update_and_split(filters: DataFrame, selected: DataFrame,
     ).applyInPandas(_fuse, out_schema)
 
 
-def _base_epoch(root: str, epoch: int, key: str) -> int | None:
+def _base_epoch(spark: SparkSession, root: str, epoch: int,
+                key: str) -> int | None:
     """Epoch whose snapshot holds the named compacted base table, or None."""
-    return _read_manifest(root, epoch).get(key)
+    return _read_manifest(spark, root, epoch).get(key)
 
 
 def _read_base_plus_deltas(spark: SparkSession, root: str, upto_epoch: int,
@@ -1103,7 +1094,7 @@ def _read_base_plus_deltas(spark: SparkSession, root: str, upto_epoch: int,
     projected to ``schema`` separately (URL-seen's deltas are the wider
     fetch logs; ``IcebergSnapshotFormat.read`` ignores ``schema``)."""
     cols = [c.split()[0] for c in schema.split(",")]
-    base = _base_epoch(root, upto_epoch, base_key)
+    base = _base_epoch(spark, root, upto_epoch, base_key)
     start = -1 if base is None else base + 1
     out = _read_existing(spark, [
         os.path.join(_snap_dir(root, e), delta_table)
@@ -1174,9 +1165,8 @@ def run_epoch(spark: SparkSession, root: str, epoch: int, web: WebConfig,
     refills — every host with a frontier row has at least one token).
     ``scraper_plan``/``emit_images`` add the epoch's payload tables (see
     ``run_crawl``)."""
-    _check_local_root(root)
     adapter = fetch_adapter or SynthWebAdapter(web)
-    refs = _frontier_refs(root, epoch - 1)
+    refs = _frontier_refs(spark, root, epoch - 1)
     host_tokens = read_host_tokens(spark, root, epoch - 1)
 
     # ---- politeness top-k (T6) + global fetch order --------------------
@@ -1198,8 +1188,7 @@ def run_epoch(spark: SparkSession, root: str, epoch: int, web: WebConfig,
             return 0
 
         # ---- fetch + parse (S4, Arrow-batched, spread by url_hash) -----
-        fetch_fn, fetch_schema = _fetch_udf(web, fetch_adapter, scraper_plan,
-                                            emit_images)
+        fetch_fn, fetch_schema = _fetch_udf(adapter, scraper_plan, emit_images)
         # Task count is a function of DATA SIZE (one task per ~50k URLs —
         # the maxPartitionBytes analog: bounds worst-case fetch-result
         # memory per python worker and retry re-fetch granularity),
@@ -1341,9 +1330,9 @@ def run_epoch(spark: SparkSession, root: str, epoch: int, web: WebConfig,
             "filter_fingerprints": fingerprints,
             "frontier_refs": {str(b): e for b, e in sorted(new_refs.items())},
             "seen_base_epoch": epoch if compact else _base_epoch(
-                root, epoch - 1, "seen_base_epoch"),
+                spark, root, epoch - 1, "seen_base_epoch"),
             "robots_base_epoch": epoch if compact else _base_epoch(
-                root, epoch - 1, "robots_base_epoch"),
+                spark, root, epoch - 1, "robots_base_epoch"),
         })
         return n_selected
     finally:

@@ -284,7 +284,7 @@ class PageDOM:
         self._children: dict[int, list[int]] | None = None
         self._value_index: tuple[dict, dict] | None = None
         # preorder => subtree of node i is the contiguous id range
-        # (i, subtree_end[i]]; computed with one reverse scan over depths
+        # (i, subtree_end[i]); computed in one scan with a stack of open nodes
         n = len(records)
         end = [n] * n
         stack: list[int] = []

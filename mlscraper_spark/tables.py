@@ -1,4 +1,4 @@
-"""TableFormat seam — pluggable storage for the crawl's snapshot tables.
+"""TableFormat seam — the one storage path for a crawl root.
 
 The north_rule mandates "Iceberg tables"; this sandbox has no Iceberg jars
 (SURVEY.md §7), so the engine writes/reads through this one indirection:
@@ -9,22 +9,28 @@ The north_rule mandates "Iceberg tables"; this sandbox has no Iceberg jars
   the engine's epoch-snapshot manifest as the commit protocol (same schema,
   same bucketing, same append-only-delta semantics).
 
-``engine.py`` contains no direct ``.parquet(`` calls; dropping Iceberg jars
-onto a real cluster flips every crawl table to Iceberg without touching the
-epoch loop.
+The seam carries the commit protocol too: the epoch manifest is read and
+committed through the format, and both formats reach the root through the
+Hadoop ``FileSystem`` of its path, so a root may be any path Spark can
+write (a local directory, ``file://``, ``hdfs://``).  ``engine.py``
+contains no file I/O of its own; dropping Iceberg jars onto a real cluster
+flips every crawl table to Iceberg without touching the epoch loop.
 """
 from __future__ import annotations
+
+import json
 
 from pyspark.sql import DataFrame, SparkSession
 
 
 class TableFormat:
     """Write/read one logical table at a path (or several paths — the
-    append-only tables are unions of per-epoch deltas), plus the probe
-    the epoch loop needs: ``exists`` (was this table ever written?).
-    Keeping the probe behind the seam is what lets the Iceberg variant
-    drop in without touching the loop.  Whether a snapshot's tables
-    committed is the engine's epoch manifest's job, not the format's."""
+    append-only tables are unions of per-epoch deltas), the probe the
+    epoch loop needs (``exists``: was this table ever written?), and the
+    snapshot's commit marker (``read_manifest``/``commit_manifest``: the
+    JSON manifest a snapshot is complete with).  The probe and the
+    manifest are implemented once here, over the Hadoop ``FileSystem``
+    of the path; the Iceberg variant keeps its own table-load probe."""
 
     def write(self, df: DataFrame, path: str) -> None:
         raise NotImplementedError
@@ -50,7 +56,45 @@ class TableFormat:
         raise NotImplementedError
 
     def exists(self, spark: SparkSession, path: str) -> bool:
-        raise NotImplementedError
+        fs, hpath = _fs(spark, path)
+        return fs.isDirectory(hpath)
+
+    def read_manifest(self, spark: SparkSession, path: str) -> dict:
+        fs, hpath = _fs(spark, path)
+        stream = fs.openFile(hpath).opt(
+            "fs.option.openfile.read.policy", "whole-file").build().get()
+        try:
+            return json.loads(bytes(stream.readAllBytes()))
+        finally:
+            stream.close()
+
+    def commit_manifest(self, spark: SparkSession, path: str,
+                        manifest: dict) -> None:
+        """Write ``manifest`` to a temp file beside ``path``, then rename
+        it to ``path``: the manifest appears only complete.  The write
+        goes through an uncached FileSystem instance with checksums off,
+        so a local root gets no ``.crc`` sidecar while the cached
+        instance Spark's table writes use stays as it is."""
+        data = bytearray(json.dumps(manifest).encode())  # fails before any I/O
+        jvm = spark._jvm
+        hpath = jvm.org.apache.hadoop.fs.Path(path)
+        tmp = jvm.org.apache.hadoop.fs.Path(path + ".tmp")
+        fs = jvm.org.apache.hadoop.fs.FileSystem.newInstance(
+            hpath.toUri(), spark._jsc.hadoopConfiguration())
+        try:
+            fs.setWriteChecksum(False)
+            out = fs.create(tmp, True)
+            try:
+                out.write(data)
+            finally:
+                out.close()
+            # neither HDFS nor the local FS renames over a file; a
+            # manifest exists here only when an epoch is re-run
+            fs.delete(hpath, False)
+            if not fs.rename(tmp, hpath):
+                raise OSError(f"could not commit manifest {path}")
+        finally:
+            fs.close()
 
 
 class ParquetSnapshotFormat(TableFormat):
@@ -71,11 +115,6 @@ class ParquetSnapshotFormat(TableFormat):
         if max_files_per_trigger is not None:
             reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
         return reader.parquet(path)
-
-    def exists(self, spark: SparkSession, path: str) -> bool:
-        import os
-
-        return os.path.isdir(path)
 
 
 class IcebergSnapshotFormat(TableFormat):
@@ -133,14 +172,18 @@ def expand_glob(spark: SparkSession, path: str) -> list[str]:
     ``spark.read``'s.  Sorted for deterministic union order."""
     if not any(c in path for c in "*?[{"):
         return [path]
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(hconf)
+    fs, hpath = _fs(spark, path)
     statuses = fs.globStatus(hpath)
     if statuses is None:
         return []
     return sorted(str(s.getPath()) for s in statuses)
+
+
+def _fs(spark: SparkSession, path: str):
+    """The Hadoop ``FileSystem`` of ``path`` (the cached instance Spark
+    uses) and ``path`` as a Hadoop ``Path``."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -157,12 +200,17 @@ _OVERRIDE: TableFormat | None = None
 
 
 def get_table_format(spark: SparkSession) -> TableFormat:
-    # probed per call: the Class.forName round-trip costs ~1 ms and a
-    # cache keyed by session identity can go stale (id() reuse after GC)
+    # the classpath probe is a py4j ClassNotFoundException round-trip
+    # (~15 ms; a two-epoch crawl asks ~30 times); its answer holds for
+    # the life of the JVM, so it is kept on the session's SparkContext
+    # object, which a new context replaces
     if _OVERRIDE is not None:
         return _OVERRIDE
+    sc = spark.sparkContext
+    if not hasattr(sc, "_iceberg_available"):
+        sc._iceberg_available = iceberg_available(spark)
     return (
-        IcebergSnapshotFormat() if iceberg_available(spark)
+        IcebergSnapshotFormat() if sc._iceberg_available
         else ParquetSnapshotFormat()
     )
 

@@ -10,7 +10,7 @@ identity is the preorder ``node_id`` (replaces soup-pointer interning,
 """
 from __future__ import annotations
 
-from itertools import combinations, product
+from itertools import product
 from statistics import mean
 
 from mlscraper_spark.dom.css import PageDOM
@@ -219,20 +219,25 @@ class ListMatch(Match):
         return f"<ListMatch {self.matches}>"
 
 
-def matches_overlap(m1: Match, m2: Match) -> bool:
-    """matches.py:31-40: same root, or one root is ancestor of the other."""
-    if m1.page_key != m2.page_key:
-        return False
-    return (
-        m1.root == m2.root
-        or has_ancestor(m1.dom(), m1.root, m2.root)
-        or has_ancestor(m2.dom(), m2.root, m1.root)
-    )
-
-
 def is_disjoint_match_combination(matches) -> bool:
-    """matches.py:220-224"""
-    return all(not matches_overlap(a, b) for a, b in combinations(matches, 2))
+    """No two matches overlap (matches.py:31-40, 220-224): matches on
+    different pages never do; on one page two overlap when their roots are
+    equal or one is an ancestor of the other (the page root is an ancestor
+    of every node).  Sorted by preorder id, each root's subtree is the id
+    range (root, subtree_end[root]), so if any root contains a later one it
+    contains the next one: only adjacent roots need a test."""
+    by_page: dict[str, list[Match]] = {}
+    for m in matches:
+        by_page.setdefault(m.page_key, []).append(m)
+    for ms in by_page.values():
+        roots = sorted(m.root for m in ms)
+        if len(roots) > 1 and roots[0] == PAGE_ROOT:
+            return False
+        end = ms[0].dom().subtree_end
+        # a repeated root a == b also fails: subtree_end[a] > a
+        if any(b < end[a] for a, b in zip(roots, roots[1:])):
+            return False
+    return True
 
 
 def is_dimensions_match(m: Match) -> bool:

@@ -15,7 +15,7 @@ from mlscraper_spark.training.matches import (
     DictMatch,
     ListMatch,
     ValueMatch,
-    matches_overlap,
+    is_disjoint_match_combination,
 )
 from mlscraper_spark.training.samples import TrainingSet
 from mlscraper_spark.training.scrapers import (
@@ -86,7 +86,7 @@ def train_scraper_for_matches(matches, roots, doms, complexity, indexes) -> dict
     found_type = found_types.pop()
     assert len(matches) == len(roots), "got uneven inputs"
 
-    if any(matches_overlap(a, b) for a, b in combinations(matches, 2)):
+    if not is_disjoint_match_combination(matches):
         raise NoScraperFoundException("a pair of matches overlaps")
 
     if found_type is ValueMatch:

@@ -6,8 +6,12 @@ Cluster usage:
     spark-submit --py-files /tmp/mlscraper_spark.zip \
         scripts/submit_crawl.py --root /data/crawl --hosts 200 --epochs 5
 
-In the sandbox there is no cluster manager, so the same script runs under
-local[N]; the code path is identical (`--master local[8]`).
+`--root` may be any Hadoop path (`/data/crawl` on the cluster's default
+filesystem, `hdfs://nn/crawl`, `file:///data/crawl`): tables, manifests
+and the snapshot listing all go through the filesystem of that path.
+
+Without a cluster manager the same script runs under local[N]; the code
+path is identical (`--master local[8]`).
 """
 from __future__ import annotations
 
@@ -19,7 +23,7 @@ import time
 
 def main():
     ap = argparse.ArgumentParser()
-    ap.add_argument("--root", required=True, help="snapshot directory")
+    ap.add_argument("--root", required=True, help="snapshot directory (any Hadoop path)")
     ap.add_argument("--hosts", type=int, default=100)
     ap.add_argument("--seeds", type=int, default=8)
     ap.add_argument("--budget", type=int, default=4)

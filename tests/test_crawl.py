@@ -189,7 +189,7 @@ def test_engine_resume_equals_uninterrupted(spark, tmp_path, oracle_state):
     shutil.rmtree(root, ignore_errors=True)
 
 
-def test_partial_snapshot_is_ignored(tmp_path):
+def test_partial_snapshot_is_ignored(spark, tmp_path):
     root = tmp_path / "partial"
     (root / "snap_00003").mkdir(parents=True)  # no manifest → incomplete
     assert last_complete_epoch(str(root)) is None
@@ -218,7 +218,7 @@ def test_clean_buckets_carry_forward(spark, tmp_path):
     run_crawl(spark, root, seeds, web, cfg, max_epochs=10)
     last = last_complete_epoch(root)
     diverged = any(
-        len(set(_frontier_refs(root, e).values())) >= 2
+        len(set(_frontier_refs(spark, root, e).values())) >= 2
         for e in range(0, last + 1)
     )
     assert diverged, "no epoch carried a clean bucket forward by reference"
@@ -297,33 +297,40 @@ def test_seed_and_epoch_job_budget(spark, tmp_path):
                                "filters"}, epoch
 
 
-@pytest.mark.parametrize("root", ["file://{tmp}/crawl",
-                                  "hdfs://localhost:9000/crawl"])
-def test_uri_crawl_root_rejected(spark, tmp_path, root):
-    """Crawl roots are local paths (manifests go through ``open``, the
-    parquet format probes with ``os.path.isdir``, so a URI root would read
-    every optional table as absent): seed_crawl, run_epoch and run_crawl
-    raise a ValueError before any Spark job runs or anything is written."""
+def test_file_uri_crawl_root_resumes(spark, tmp_path):
+    """A crawl root may be any Hadoop path: every table, manifest and
+    listing goes through the filesystem of the root's scheme.  A
+    ``file://`` root, killed after epoch 1 and resumed, holds the same
+    fetch log, URL-seen set and manifests as the same crawl on a plain
+    path, and both equal the oracle.  (An ``hdfs:`` root takes the same
+    code path; it needs a cluster to run.)"""
     import os
 
-    from mlscraper_spark.crawl.engine import run_epoch, seed_crawl
+    from mlscraper_spark.crawl.engine import _read_manifest
 
-    root = root.format(tmp=tmp_path)
-    web = WebConfig(n_hosts=2, max_pages_per_host=4)
+    web = WebConfig(n_hosts=4, max_pages_per_host=6)
+    seeds = web.seeds(4)
     cfg = CrawlConfig(budget_per_host=2, n_buckets=8)
+    plain = str(tmp_path / "plain")
+    uri = f"file://{tmp_path}/uri"
+    run_crawl(spark, plain, seeds, web, cfg, max_epochs=4)
+    run_crawl(spark, uri, seeds, web, cfg, max_epochs=2)  # "kill" after 1
+    assert last_complete_epoch(uri) == 1
+    run_crawl(spark, uri, seeds, web, cfg, max_epochs=4)
+    assert sorted(os.listdir(tmp_path)) == ["plain", "uri"]
 
-    def rejected(call):
-        with pytest.raises(ValueError, match="not a URI"):
-            call()
-
-    for call in (lambda: seed_crawl(spark, root, web.seeds(2), web, cfg),
-                 lambda: run_epoch(spark, root, 0, web, cfg),
-                 lambda: run_crawl(spark, root, web.seeds(2), web, cfg,
-                                   max_epochs=2)):
-        _, n_jobs = jobs_submitted(spark, lambda: rejected(call))
-        assert n_jobs == 0
-    assert os.listdir(tmp_path) == []
-    assert not os.path.exists(root.split(":")[0] + ":")
+    want = crawl_oracle(seeds, web, budget_per_host=2, max_epochs=4)
+    last = last_complete_epoch(plain)
+    assert last_complete_epoch(uri) == last == want.fetch_log[-1]["epoch"]
+    for root in (plain, uri):
+        assert _fetch_log_tuples(spark, root) == [
+            (r["epoch"], r["seq"], r["url_canon"]) for r in want.fetch_log
+        ]
+        seen = read_url_seen(spark, root, last).collect()
+        assert {r.url_canon for r in seen} == want.url_seen
+    for e in range(-1, last + 1):
+        assert (_read_manifest(spark, uri, e)
+                == _read_manifest(spark, plain, e)), e
 
 
 def test_seed_snapshot_holds_no_empty_tables(spark, tmp_path):
@@ -379,15 +386,20 @@ def test_seed_snapshot_holds_no_empty_tables(spark, tmp_path):
 
 @pytest.mark.parametrize("table,epoch", [("robots_delta", -1),
                                          ("filters", 1),
-                                         ("fetch_log", 1)])
-def test_failed_snapshot_write_leaves_no_manifest(spark, tmp_path, table,
-                                                  epoch):
+                                         ("fetch_log", 1),
+                                         ("_manifest.json", 1)])
+def test_failed_snapshot_write_leaves_no_manifest(spark, tmp_path,
+                                                  monkeypatch, table, epoch):
     """A seam write that throws inside the snapshot's write pool fails the
     crawl, leaves the snapshot without a manifest and releases the call's
     caches; a rerun with a working format resumes from the last committed
-    snapshot and equals the oracle."""
+    snapshot and equals the oracle.  The ``_manifest.json`` case makes the
+    manifest itself fail to serialize (an ``np.int64`` count, as a
+    pandas-derived value would be): the commit leaves no partial
+    manifest behind for the resume to count as committed."""
     import os
 
+    from mlscraper_spark.crawl import engine
     from mlscraper_spark.crawl.engine import _manifest_path, _snap_dir
     from mlscraper_spark.tables import ParquetSnapshotFormat, use_table_format
 
@@ -406,14 +418,28 @@ def test_failed_snapshot_write_leaves_no_manifest(spark, tmp_path, table,
     def persistent_rdds():
         return spark.sparkContext._jsc.getPersistentRDDs().size()
 
+    commit = engine._commit_snapshot
+
+    def unserializable_commit(spark_, root_, epoch_, writes, manifest):
+        if epoch_ == epoch:
+            manifest = {**manifest,
+                        "n_fetched": np.int64(manifest["n_fetched"])}
+        commit(spark_, root_, epoch_, writes, manifest)
+
+    if table == "_manifest.json":
+        monkeypatch.setattr(engine, "_commit_snapshot", unserializable_commit)
+        fmt, error = ParquetSnapshotFormat(), "not JSON serializable"
+    else:
+        fmt, error = FailingFormat(), "injected write failure"
     before = persistent_rdds()
-    with use_table_format(FailingFormat()):
-        with pytest.raises(RuntimeError, match="injected write failure"):
+    with use_table_format(fmt):
+        with pytest.raises((RuntimeError, TypeError), match=error):
             run_crawl(spark, root, seeds, web, cfg, max_epochs=3)
     assert persistent_rdds() == before
     assert not os.path.exists(_manifest_path(root, epoch))
     assert last_complete_epoch(root) == (None if epoch == -1 else epoch - 1)
 
+    monkeypatch.setattr(engine, "_commit_snapshot", commit)
     run_crawl(spark, root, seeds, web, cfg, max_epochs=3)
     want = crawl_oracle(seeds, web, budget_per_host=2, max_epochs=3)
     assert _fetch_log_tuples(spark, root) == [
@@ -433,7 +459,7 @@ def test_compaction_rewrites_and_stays_exact(spark, tmp_path):
     root = str(tmp_path / "compact")
     run_crawl(spark, root, seeds, web, cfg, max_epochs=4)
     last = last_complete_epoch(root)
-    refs = _frontier_refs(root, last)
+    refs = _frontier_refs(spark, root, last)
     assert len(set(refs.values())) == 1
     want = crawl_oracle(seeds, web, budget_per_host=2, max_epochs=4)
     assert _fetch_log_tuples(spark, root) == [
@@ -460,7 +486,7 @@ def _to_old_seen_layout(spark, root, cfg):
     }).cache()
     seen = log.select("url_canon", "url_hash", "host_bucket",
                       F.col("epoch").alias("seen_epoch"))
-    base = _base_epoch(root, last, "seen_base_epoch")
+    base = _base_epoch(spark, root, last, "seen_base_epoch")
     assert base is not None
     base_dir = os.path.join(_snap_dir(root, base), "url_seen_base")
     old_base = seen.filter(F.col("seen_epoch") <= base)
@@ -511,7 +537,7 @@ def test_resume_across_ref_chain_and_compaction(spark, tmp_path):
     seen = {r.url_canon for r in read_url_seen(spark, root, last).collect()}
     assert seen == want.url_seen
     # the seen-compaction actually fired and the base table exists
-    base = _base_epoch(root, last, "seen_base_epoch")
+    base = _base_epoch(spark, root, last, "seen_base_epoch")
     assert base is not None and base >= 1
     assert os.path.isdir(os.path.join(_snap_dir(root, base), "url_seen_base"))
 
@@ -675,7 +701,7 @@ def test_junk_seed_dropped_identically(spark, tmp_path, oracle_state):
     ]
 
 
-def test_pre_refactor_manifest_fails_loudly(tmp_path):
+def test_pre_refactor_manifest_fails_loudly(spark, tmp_path):
     """A manifest without frontier_refs (pre-bucket-manifest format) must
     raise, never read an empty frontier and report the crawl 'done'."""
     import json
@@ -685,7 +711,7 @@ def test_pre_refactor_manifest_fails_loudly(tmp_path):
     snap.mkdir(parents=True)
     (snap / "_manifest.json").write_text(json.dumps({"epoch": -1, "seeds": 4}))
     with pytest.raises(RuntimeError, match="predates"):
-        _frontier_refs(str(root), -1)
+        _frontier_refs(spark, str(root), -1)
 
 
 def test_politeness_two_phase_no_frontier_exchange(spark, tmp_path):
@@ -761,7 +787,7 @@ def test_cuckoo_blob_carries_config():
         CuckooFilter.from_bytes(b"garbage-blob")
 
 
-def test_stray_snapshot_names_ignored(tmp_path):
+def test_stray_snapshot_names_ignored(spark, tmp_path):
     # snap_tmp / editor leftovers must not break resume (strict regex)
     root = tmp_path / "stray"
     (root / "snap_tmp").mkdir(parents=True)
@@ -863,12 +889,13 @@ def test_delta_merge_single_exchange_no_join(spark):
 
 def test_table_format_seam_contract(spark, tmp_path, oracle_state):
     """Inject a counting TableFormat through run_crawl and prove the epoch
-    loop touches table storage ONLY via the seam: every parquet dir that
-    exists on disk afterwards was written through the injected format, all
-    reads and existence probes went through it too (every probe inside
-    the crawl root), and the crawl result is unchanged.  The JSON epoch
-    manifest is the engine's own commit marker — an engine concept, not
-    table storage — and is exactly the non-parquet residue."""
+    loop touches the crawl root ONLY via the seam: every file on disk
+    afterwards is inside a table dir written through the injected format
+    or is a manifest committed through it, all reads, existence probes
+    and manifest reads went through it too (every path inside the crawl
+    root), and the crawl result is unchanged.  A format whose
+    ``commit_manifest`` raises leaves no manifest, and the rerun equals
+    the oracle."""
     import os
 
     from mlscraper_spark.tables import ParquetSnapshotFormat, use_table_format
@@ -878,6 +905,8 @@ def test_table_format_seam_contract(spark, tmp_path, oracle_state):
             self.writes: list[str] = []
             self.reads: list[str] = []
             self.probes: list[str] = []
+            self.manifest_reads: list[str] = []
+            self.commits: list[str] = []
 
         def write(self, df, path):
             self.writes.append(path)
@@ -890,6 +919,14 @@ def test_table_format_seam_contract(spark, tmp_path, oracle_state):
         def exists(self, spark_, path):
             self.probes.append(path)
             return super().exists(spark_, path)
+
+        def read_manifest(self, spark_, path):
+            self.manifest_reads.append(path)
+            return super().read_manifest(spark_, path)
+
+        def commit_manifest(self, spark_, path, manifest):
+            self.commits.append(path)
+            super().commit_manifest(spark_, path, manifest)
 
     root = str(tmp_path / "seam")
     fake = CountingFormat()
@@ -904,11 +941,13 @@ def test_table_format_seam_contract(spark, tmp_path, oracle_state):
     assert got == [(r["epoch"], r["seq"], r["url_canon"])
                    for r in oracle_state.fetch_log]
     assert fake.writes and fake.reads and fake.probes
-    assert all(os.path.commonpath([root, p]) == root for p in fake.probes), (
-        fake.probes)
-    # every on-disk table dir under the root was written via the seam;
-    # the only files not inside a seam-written dir are the manifests
+    assert fake.manifest_reads and fake.commits
+    assert all(os.path.commonpath([root, p]) == root
+               for p in fake.probes + fake.manifest_reads + fake.commits)
+    # every file under the root is a committed manifest or lies inside a
+    # table dir written via the seam
     written = {os.path.normpath(p) for p in fake.writes}
+    committed = {os.path.normpath(p) for p in fake.commits}
     on_disk_tables = set()
     stray = []
     for base, dirs, files in os.walk(root):
@@ -917,10 +956,33 @@ def test_table_format_seam_contract(spark, tmp_path, oracle_state):
             on_disk_tables.add(norm)
             dirs.clear()  # parquet internals belong to the format
             continue
-        for f in files:
-            stray.append(os.path.join(base, f))
+        stray += [os.path.join(norm, f) for f in files
+                  if os.path.join(norm, f) not in committed]
     assert on_disk_tables == {p for p in written if os.path.isdir(p)}
-    assert all(os.path.basename(p) == "_manifest.json" for p in stray), stray
+    assert stray == []
+    assert committed == {os.path.join(os.path.normpath(root), f"snap_{e:05d}",
+                                      "_manifest.json")
+                         for e in range(last_complete_epoch(root) + 2)}
+
+    class FailingCommit(ParquetSnapshotFormat):
+        def commit_manifest(self, spark_, path, manifest):
+            if manifest["epoch"] == 1:
+                raise OSError(f"injected commit failure: {path}")
+            super().commit_manifest(spark_, path, manifest)
+
+    root = str(tmp_path / "failing_commit")
+    with use_table_format(FailingCommit()):
+        with pytest.raises(OSError, match="injected commit failure"):
+            run_crawl(spark, root, SEEDS, WEB,
+                      CrawlConfig(budget_per_host=BUDGET), max_epochs=3)
+    assert last_complete_epoch(root) == 0
+    assert not os.path.exists(os.path.join(root, "snap_00002", "_manifest.json"))
+    run_crawl(spark, root, SEEDS, WEB, CrawlConfig(budget_per_host=BUDGET),
+              max_epochs=3)
+    assert _fetch_log_tuples(spark, root) == [
+        (r["epoch"], r["seq"], r["url_canon"]) for r in oracle_state.fetch_log
+        if r["epoch"] < 3
+    ]
 
 
 def test_streaming_sources_honor_table_format_seam(spark, tmp_path):

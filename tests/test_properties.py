@@ -11,7 +11,13 @@ from hypothesis import strategies as st
 
 from mlscraper_spark.dom.css import PageDOM
 from mlscraper_spark.dom.parser import parse_html
-from mlscraper_spark.training.matches import PAGE_ROOT
+from mlscraper_spark.training.matches import (
+    PAGE_ROOT,
+    TEXT_EXTRACTOR,
+    ValueMatch,
+    has_ancestor,
+    is_disjoint_match_combination,
+)
 
 TAGS = ["div", "span", "p", "ul", "li", "section", "em"]
 WORDS = ["alpha", "beta", "gamma", "delta", "karl", "x1"]
@@ -242,6 +248,47 @@ def test_reference_user_surface_selectors_evaluate():
     assert dom.select(PAGE_ROOT, "li:nth-child(odd)") == [
         dom.select(PAGE_ROOT, "li")[0], dom.select(PAGE_ROOT, "li")[2]
     ]
+
+
+def _pairwise_overlap(m1, m2) -> bool:
+    """The reference's overlap test (matches.py:31-40): same page, and the
+    same root or one root an ancestor of the other."""
+    return m1.page_key == m2.page_key and (
+        m1.root == m2.root
+        or has_ancestor(m1.dom(), m1.root, m2.root)
+        or has_ancestor(m2.dom(), m2.root, m1.root)
+    )
+
+
+@given(st.lists(st.lists(dom_html(), min_size=1, max_size=4),
+                min_size=1, max_size=3), st.data())
+@settings(max_examples=300, deadline=None)
+def test_disjoint_match_combination_vs_pairwise(pages, data):
+    """The sorted adjacent-root check equals the all-pairs overlap test
+    over random pages and root sets.  Uniform roots nearly always overlap
+    (the page root, html and body contain everything), so each page's
+    roots start as a chain that is disjoint as built: every root lies
+    after the previous one's subtree, the node right after it included.
+    Extra roots then add the page root, repeats and nested nodes, and the
+    matches span several pages in a random order."""
+    matches = []
+    for i, dom in enumerate(PageDOM(parse_html("".join(p).encode()))
+                            for p in pages):
+        n, end = len(dom), dom.subtree_end
+        roots = []
+        r = data.draw(st.sampled_from(range(PAGE_ROOT, n)))
+        while r < n and data.draw(st.booleans()):
+            roots.append(r)
+            r = n if r == PAGE_ROOT else data.draw(
+                st.sampled_from(range(end[r], n + 1)))
+        roots += data.draw(st.lists(
+            st.sampled_from(roots + list(range(PAGE_ROOT, n))), max_size=2))
+        matches += [ValueMatch(f"page{i}", dom, r, TEXT_EXTRACTOR)
+                    for r in roots]
+    matches = data.draw(st.permutations(matches))
+    want = not any(_pairwise_overlap(a, b)
+                   for k, a in enumerate(matches) for b in matches[k + 1:])
+    assert is_disjoint_match_combination(matches) == want
 
 
 @given(st.permutations(range(4)))
